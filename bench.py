@@ -50,8 +50,11 @@ were all load-wave samples the gate-at-start could not see):
 * **window load re-check**: the child records load1 at timing start AND
   end (``load1_max`` = the worse of the two); the parent re-runs (fresh
   subprocess, same adaptive cap) any query whose WINNING child's window
-  saw load1 > ``0.5 × cpus`` — a wave that arrives mid-window now
-  triggers a re-measure instead of silently inflating the artifact.
+  saw load1 > ``max(0.5 × cpus, LOAD_GATE)`` — a wave that arrives
+  mid-window now triggers a re-measure instead of silently inflating
+  the artifact. A box under 20 cores therefore falls back to the
+  absolute ``LOAD_GATE`` threshold (10 load1), the same one the child
+  tolerates before timing.
   The recorded value stays the min over children (load only ever
   inflates a timing, so min-wins is already wave-robust — the re-check
   guarantees the min itself came from a clean window whenever one was

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.readers import local_frame
+
 
 @dataclass(frozen=True)
 class CheckResult:
@@ -405,4 +407,4 @@ def results_df(spark, results: Sequence[CheckResult]) -> DataFrame:
             T.StructField("expected", T.StringType(), False),
         ]
     )
-    return spark.createDataFrame([(r.check, r.passed, r.observed, r.expected) for r in results], schema)
+    return local_frame(spark, [(r.check, r.passed, r.observed, r.expected) for r in results], schema)

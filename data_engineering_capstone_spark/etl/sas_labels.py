@@ -20,6 +20,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..sources.readers import local_frame
+
 # ``value <name>`` ... ``;``  blocks; entries are  <code> = '<label>'.
 # SAS escapes a quote inside a quoted literal by doubling it
 # (reference: I94_SAS_Labels_Descriptions.SAS:509  'INT''L FALLS, MN'),
@@ -87,7 +89,7 @@ def dim_from_map(
             T.StructField(value_col, T.StringType(), False),
         ]
     )
-    df = spark.createDataFrame(list(mapping.items()), schema)
+    df = local_frame(spark, mapping.items(), schema)
     if key_type is not None:
         df = df.withColumn(key_col, df[key_col].cast(key_type))
     return df

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.strings import tokens
+from ..sources.readers import local_frame
 
 END_MARK = "</w>"
 
@@ -114,8 +115,8 @@ def learn_bpe_merges(df: DataFrame, text_col: str, num_merges: int = 10) -> Data
 
         sym = sym.withColumn("syms", make_apply(left, right)("syms")).localCheckpoint()
 
-    return spark.createDataFrame(
-        merges, "rank int, left string, right string, pair_freq bigint"
+    return local_frame(
+        spark, merges, "rank int, left string, right string, pair_freq bigint"
     )
 
 

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..functions.strings import ngrams, tokens
 from ..operators.prefix import global_running_sum
+from ..sources.readers import local_frame
 
 
 def repetition_metrics(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -337,7 +338,7 @@ def _tiny_quota_select(
             T.StructField("__cut", T.LongType()),
         ]
     )
-    cut = df.sparkSession.createDataFrame(cut_rows, schema)
+    cut = local_frame(df.sparkSession, cut_rows, schema)
     tagged = df.withColumn("__h", F.md5(F.col(id_col).cast("string"))).withColumn(
         "__b", F.conv(F.substring(F.col("__h"), 1, prefix_len), 16, 10).cast("long")
     )
@@ -583,7 +584,8 @@ def rebalance_mix(
         else hash_bucket_histogram(df, group_col, id_col, prefix_len)
     )
     total = hist.agg(F.sum("__n")).first()[0] or 0
-    quotas = df.sparkSession.createDataFrame(
+    quotas = local_frame(
+        df.sparkSession,
         [(g, total * int(bp) // 10000) for g, bp in sorted(weights_bp.items())],
         f"{group_col} string, __quota long",
     )
@@ -723,7 +725,8 @@ def temperature_mix(
     # Selection rides hash_quota_select (round-10 rewrite): identical
     # membership to the per-group row_number prefix without the
     # |groups|-task corpus sort, so the oracle keeps its row_number form.
-    quotas = df.sparkSession.createDataFrame(
+    quotas = local_frame(
+        df.sparkSession,
         [
             (g, int(math.floor(keep_total * (math.sqrt(n) if alpha == 0.5 else n**alpha) / z)))
             for g, n in sorted(counts.items())

@@ -19,6 +19,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.readers import local_frame
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -66,7 +68,7 @@ def cosine_topk(
     qrows = queries.select(F.col(id_col), F.col(vec_col)).collect()
     if not qrows:
         schema = f"{query_id_col} {qid_dt}, neighbor_id {nid_dt}, cos_sim double, rk int"
-        return corpus.sparkSession.createDataFrame([], schema)
+        return local_frame(corpus.sparkSession, [], schema)
     q_ids = np.array([r[id_col] for r in qrows])
     qm = np.array([r[vec_col] for r in qrows], dtype=np.float64)
     qn = qm / np.linalg.norm(qm, axis=1, keepdims=True)
@@ -350,7 +352,7 @@ def ivf_ann_topk(
     # centroid table: (cell, centroid array) — tiny, broadcast everywhere
     centroids = [(i, [float(v) for v in c]) for i, c in enumerate(model.clusterCenters())]
     spark = corpus.sparkSession
-    cent_df = spark.createDataFrame(centroids, "cell int, centroid array<double>")
+    cent_df = local_frame(spark, centroids, "cell int, centroid array<double>")
 
     # corpus side: each vector lands in its ONE nearest cell
     assigned = model.transform(train).select(
@@ -567,8 +569,8 @@ def pq_query_index(
 
     qrows = queries.select(id_col, vec_col).collect()
     if not qrows:
-        return spark.createDataFrame(
-            [], f"{query_id_col} {qid_dt}, neighbor_id {nid_dt}, cos_sim double, rk int"
+        return local_frame(
+            spark, [], f"{query_id_col} {qid_dt}, neighbor_id {nid_dt}, cos_sim double, rk int"
         )
     q_ids = [r[id_col] for r in qrows]
     qm = np.array([r[vec_col] for r in qrows], dtype=np.float64)
@@ -589,7 +591,7 @@ def pq_query_index(
                 lut[qi, ci, j] = ((books[j] - sub) ** 2).sum(1)
     bq = spark.sparkContext.broadcast((q_ids, probed, lut))
     probe_rows = [(int(ci), qi) for qi in range(nq) for ci in probed[qi]]
-    probe_df = spark.createDataFrame(probe_rows, "cell int, __qi int")
+    probe_df = local_frame(spark, probe_rows, "cell int, __qi int")
 
     def _adc(batches):
         q_ids_, _, lut_ = bq.value
@@ -618,8 +620,8 @@ def pq_query_index(
         .mapInPandas(_adc, f"__qi int, neighbor_id {nid_dt}, __adc double")
     )
     wq = Window.partitionBy("__qi").orderBy(F.col("__adc").asc(), F.col("neighbor_id"))
-    qid_df = spark.createDataFrame(
-        list(zip(range(nq), q_ids)), f"__qi int, {query_id_col} {qid_dt}"
+    qid_df = local_frame(
+        spark, list(zip(range(nq), q_ids)), f"__qi int, {query_id_col} {qid_dt}"
     )
     short = (
         adc.withColumn("__srk", F.row_number().over(wq))

@@ -21,6 +21,7 @@ from .operators.dedup import dedup_exact
 from .operators.pivot import pivot_wide
 from .operators.relational import code_to_name
 from .session import prep
+from .sources.readers import local_frame
 from .sources.testdata import load_table
 from .sources.writers import write_parquet, write_zordered
 
@@ -135,7 +136,8 @@ def etl_code_to_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     coalesce, zero shuffle of the fact side.
     """
     o = _t(spark, sf_dir, "orders")
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [("1-URGENT", "critical"), ("2-HIGH", "critical"), ("3-MEDIUM", "routine")],
         "code string, urgency string",
     )
@@ -426,7 +428,8 @@ def etl_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     write_parquet(observed, out)  # the one action; metrics piggyback on it
     m = obs.get
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(m["n_rows"]), int(m["n_discounted"]), float(m["total_price"]))],
         "n_rows bigint, n_discounted bigint, total_price double",
     )

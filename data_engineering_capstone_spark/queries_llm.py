@@ -34,6 +34,7 @@ from .llm.text import (
 )
 from .functions.strings import ngrams, token_count
 from .session import prep
+from .sources.readers import local_frame
 from .sources.testdata import load_table
 
 
@@ -269,7 +270,8 @@ def llm_minhash_collapsed(spark: SparkSession, sf_dir: str) -> DataFrame:
     spam = spark.range(500).select(
         (F.col("id") + 20_000_000).alias("doc_id"), F.lit(template).alias("text")
     )
-    variant = spark.createDataFrame(
+    variant = local_frame(
+        spark,
         [(19_999_999, template.replace("daily updates", "weekly updates"))],
         "doc_id long, text string",
     )
@@ -2757,7 +2759,8 @@ def llm_dedup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_tri = tri.count()
     n_edges = e.count()
     n_nodes = nodes.distinct().count()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_tri, n_edges, n_nodes)],
         "n_triangles bigint, n_edges bigint, n_nodes bigint",
     )

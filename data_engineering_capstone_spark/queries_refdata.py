@@ -37,6 +37,7 @@ from pyspark.sql import types as T
 
 from .catalog import query
 from .session import prep
+from .sources.readers import local_frame
 
 REF_DIR = os.environ.get("SPARK_GRAFT_REF_DIR", "/root/reference")
 _LABELS = os.path.join(REF_DIR, "I94_SAS_Labels_Descriptions.SAS")
@@ -144,7 +145,7 @@ def ref_sas_labels_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
         "i94addrl": "state",
         "visa": "visa_category",
     }
-    # dimension-scale (1,011 rows): ONE createDataFrame for all five maps
+    # dimension-scale (1,011 rows): ONE local table for all five maps
     # beats five small Spark jobs + a union (measured ~8 s -> ~1 s; the
     # broadcast-join path keeps per-dim frames via _real_dims)
     rows = [
@@ -152,7 +153,7 @@ def ref_sas_labels_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
         for fmt in ("i94cntyl", "i94prtl", "i94model", "i94addrl", "visa")
         for code, label in maps[fmt].items()
     ]
-    res = spark.createDataFrame(rows, "dim string, code string, label string")
+    res = local_frame(spark, rows, "dim string, code string, label string")
     return res.coalesce(1).orderBy("dim", "code")
 
 

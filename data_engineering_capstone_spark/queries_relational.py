@@ -17,6 +17,7 @@ from .functions.money import sum_cents_exact, to_cents
 from .operators.relational import anti_join, broadcast_dim_join
 from .operators.topk import top_k, top_k_per_group
 from .session import prep
+from .sources.readers import local_frame
 from .sources.testdata import load_table
 
 
@@ -975,7 +976,8 @@ def range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.rangejoin import point_interval_join
 
     p = _t(spark, sf_dir, "part")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [("900s", 900.0, 925.0), ("925s", 925.0, 950.0),
          ("950s", 950.0, 975.0), ("975s", 975.0, 1000.0)],
         "band string, lo double, hi double",
@@ -1632,7 +1634,8 @@ def interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_shipdate").cast("date"), F.col("l_quantity").cast("int")
         ).alias("t_end"),
     )
-    promos = spark.createDataFrame(
+    promos = local_frame(
+        spark,
         [
             ("W96", "1996-03-01", "1996-04-15"),
             ("W97", "1997-06-10", "1997-07-10"),

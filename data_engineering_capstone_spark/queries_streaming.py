@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from .catalog import query
 from .session import prep
+from .sources.readers import local_frame
 from .streaming.windows import (
     dedup_within_watermark,
     interval_join_clicks_purchases,
@@ -542,7 +543,7 @@ def stream_custom_sink_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
         for p in parts[1:]:
             landed = landed.unionByName(p)
     else:
-        landed = spark.createDataFrame([], schema)
+        landed = local_frame(spark, [], schema)
     return (
         landed.groupBy("event_type")
         .agg(

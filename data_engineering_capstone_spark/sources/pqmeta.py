@@ -111,12 +111,15 @@ def parquet_row_groups(path: str) -> int:
     return sum(pq.ParquetFile(f).metadata.num_row_groups for f in _parquet_files(path))
 
 
-# (path, mtime, threshold) → bool cache for the fan-out gate probe.
+# path → (stamp, threshold, verdict) cache for the fan-out gate probe.
 # Metadata only (footer counts), never query results: the same
 # information Spark's own footer cache holds, memoized so repeated plan
-# builds against one table cost zero re-reads. Keyed on the directory/
-# file mtime so a regenerated table re-probes instead of reading stale.
-_RG_GATE_CACHE: dict[tuple[str, float, int], bool] = {}
+# builds against one table cost zero re-reads. The stamp covers every
+# part file (count, total size, newest st_mtime_ns), because a
+# directory's own mtime does not move when a part file is rewritten in
+# place; a changed stamp re-probes and replaces the path's one entry.
+# A hit costs a listing and one stat per part file, no footer read.
+_RG_GATE_CACHE: dict[str, tuple[tuple[int, int, int], int, bool]] = {}
 
 
 def row_groups_at_least(path: str, threshold: int) -> bool:
@@ -128,20 +131,22 @@ def row_groups_at_least(path: str, threshold: int) -> bool:
     comparison only needs ``groups >= threshold``, so stop opening
     footers the moment the running sum crosses it (a production-scale
     table satisfies the gate within the first file or two), and
-    memoize the verdict per (path, mtime, threshold)."""
+    memoize the verdict per path, stamped by its part files."""
     import pyarrow.parquet as pq
 
-    key = (path, os.stat(path).st_mtime, threshold)
-    hit = _RG_GATE_CACHE.get(key)
-    if hit is not None:
-        return hit
+    files = _parquet_files(path)
+    stats = [os.stat(f) for f in files]
+    stamp = (len(stats), sum(s.st_size for s in stats), max(s.st_mtime_ns for s in stats))
+    hit = _RG_GATE_CACHE.get(path)
+    if hit is not None and hit[:2] == (stamp, threshold):
+        return hit[2]
     groups = 0
-    for f in _parquet_files(path):
+    for f in files:
         groups += pq.ParquetFile(f).metadata.num_row_groups
         if groups >= threshold:
             break
-    _RG_GATE_CACHE[key] = groups >= threshold
-    return _RG_GATE_CACHE[key]
+    _RG_GATE_CACHE[path] = (stamp, threshold, groups >= threshold)
+    return groups >= threshold
 
 
 def fanout_starved_scan(df, spark, sf_dir: str, table: str):
@@ -161,8 +166,8 @@ def fanout_starved_scan(df, spark, sf_dir: str, table: str):
     but scalar_math_funcs 0.81 s → 1.15 s — fan-out rejected there).
 
     The probe short-circuits at the parallelism threshold and memoizes
-    per (path, mtime), so at scale it opens at most a handful of
-    footers once per table, not every footer per query build.
+    per path and part-file stamp, so at scale it opens at most a handful
+    of footers once per table, not every footer per query build.
 
     Unreadable/remote paths (or a missing pyarrow) degrade to the
     unchanged df — the module's graceful-degradation contract."""

@@ -86,6 +86,33 @@ def read_xml(
     return reader.load(path)
 
 
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """A driver-born small table (label dims, lookup lists, one-row
+    results) as a JVM-local ``LocalRelation``.
+
+    ``spark.createDataFrame(list, schema)`` pickles the rows into a
+    ``parallelize`` RDD, so every plan that scans it starts a Python
+    worker stage. Handing Spark a ``pyarrow.Table`` typed by the schema
+    instead ships the rows to the JVM once, as Arrow, whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says; the scan is a
+    ``LocalTableScan`` with exact size statistics. Column types and
+    nullability are the schema's; a null in a non-nullable column raises
+    as the pickled path's schema check did.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    arrays = [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)]
+    for a, f in zip(arrays, arrow_schema):
+        if not f.nullable and a.null_count:
+            raise ValueError(f"local_frame: null in non-nullable column {f.name!r}")
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema), schema)
+
+
 def read_sas(spark: SparkSession, path: str) -> DataFrame:
     """SAS7BDAT scan (reference: notebook cell-5, dags/libs/lib.py:139).
 

@@ -127,6 +127,84 @@ def test_pipeline_end_to_end(spark, i94_fixture):
     assert a[("LOS ANGELES, CA", "Business")] == 1
 
 
+def _pickled_dim(spark, mapping, key_type=None):
+    """The pre-Arrow build of ``dim_from_map``: a pickled row list."""
+    schema = T.StructType(
+        [T.StructField("code", T.StringType(), False), T.StructField("name", T.StringType(), False)]
+    )
+    df = spark.createDataFrame(list(mapping.items()), schema)
+    return df if key_type is None else df.withColumn("code", df["code"].cast(key_type))
+
+
+@pytest.mark.parametrize("arrow_conf", ["true", "false"])
+def test_dim_from_map_is_local_relation(spark, arrow_conf):
+    """Label dims are JVM-local tables with the pickled build's rows,
+    types and nullability, whatever the Arrow conf says."""
+    maps = parse_sas_value_maps(
+        SAS_SAMPLE + "value $i94prtx\n   'INT' = 'INT''L FALLS, MN'\n   'NYC' = 'NEW YORK, NY' ;\n"
+    )
+    assert maps["i94prtx"]["INT"] == "INT'L FALLS, MN"
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, arrow_conf)
+    try:
+        cases = [
+            (maps["i94prtx"], None),
+            ({}, None),
+            (maps["i94cntyl"], T.LongType()),
+        ]
+        for mapping, key_type in cases:
+            dim = dim_from_map(spark, mapping, "code", "name", key_type)
+            want = _pickled_dim(spark, mapping, key_type)
+            plan = dim._jdf.queryExecution().analyzed().toString()
+            assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+            assert dim.schema == want.schema
+            assert sorted(dim.collect()) == sorted(want.collect())
+    finally:
+        spark.conf.set(conf, before)
+
+
+def test_local_frame_rejects_null_in_non_nullable_column(spark):
+    from data_engineering_capstone_spark.sources.readers import local_frame
+
+    schema = T.StructType([T.StructField("code", T.StringType(), False)])
+    with pytest.raises(ValueError, match="non-nullable"):
+        local_frame(spark, [("a",), (None,)], schema)
+
+
+def _subtrees(plan: str, node: str) -> list[str]:
+    """Text of every subtree rooted at a ``node`` line of a plan string."""
+    lines = plan.splitlines()
+    out = []
+    for i, line in enumerate(lines):
+        at = line.find(node)
+        if at < 0:
+            continue
+        sub = [line]
+        for nxt in lines[i + 1 :]:
+            if len(nxt) - len(nxt.lstrip(" |:+-")) <= at:
+                break
+            sub.append(nxt)
+        out.append("\n".join(sub))
+    return out
+
+
+def test_join_dims_broadcasts_local_table_scans(spark, i94_fixture, tmp_path):
+    """Every broadcast dimension is a LocalTableScan: the fact write
+    runs no pickled-RDD (Python worker) scan."""
+    fact_path = str(tmp_path / "fact")
+    i94_fixture.write.parquet(fact_path)
+    fact = pipeline.convert_dates(pipeline.clean(spark.read.parquet(fact_path)))
+    named = pipeline.join_dims(fact, _dims(spark))
+    assert len(named.collect()) == 3
+    plan = named._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    broadcasts = _subtrees(final, "BroadcastExchange")
+    assert len(broadcasts) == 5, final
+    assert all("LocalTableScan" in b for b in broadcasts), final
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+
+
 def test_quality_checks_pass_and_fail(spark, i94_fixture):
     cleaned = pipeline.clean(i94_fixture)
     assert_checks(

@@ -137,3 +137,42 @@ def test_row_groups_gate_short_circuits_and_memoizes(spark, sf_dir, tmp_path, mo
     # a starved probe still answers False (single-row-group file)
     pqmeta._RG_GATE_CACHE.clear()
     assert pqmeta.row_groups_at_least(f"{sf_dir}/nation.parquet", threshold) is False
+
+
+def test_row_groups_gate_reprobes_table_rewritten_in_place(tmp_path, monkeypatch):
+    """A part file rewritten in place leaves the directory's own mtime
+    unchanged; the gate must still see the new footers, and the cache
+    keeps one entry per path instead of one per stamp."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_engineering_capstone_spark.sources import pqmeta
+
+    table_dir = tmp_path / "rewritten"
+    table_dir.mkdir()
+    part = str(table_dir / "part-0.parquet")
+    rows = pa.table({"x": list(range(300))})
+    pq.write_table(rows, part)  # one row group
+    out = str(table_dir)
+
+    opened: list[str] = []
+    real = pq.ParquetFile
+
+    def counting(f, *a, **k):
+        opened.append(f)
+        return real(f, *a, **k)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    pqmeta._RG_GATE_CACHE.clear()
+    assert pqmeta.row_groups_at_least(out, 3) is False
+    assert opened == [part]
+
+    dir_mtime = os.stat(out).st_mtime_ns
+    with open(part, "wb") as f:  # same name, same directory entry
+        pq.write_table(rows, f, row_group_size=100)  # three row groups
+    assert os.stat(out).st_mtime_ns == dir_mtime
+
+    opened.clear()
+    assert pqmeta.row_groups_at_least(out, 3) is True
+    assert opened == [part]  # probed again, not served from the cache
+    assert list(pqmeta._RG_GATE_CACHE) == [out]
