@@ -43,12 +43,10 @@ def clean(
 
     (reference: notebook cell-7 'missing values, duplicate data')
     """
-    out = df.dropna(subset=list(required))
-    out = dedup_exact(out, [key])
-    for c in INTEGRAL_CODE_COLS:
-        if c in out.columns:
-            out = out.withColumn(c, F.col(c).cast("long"))
-    return out
+    out = dedup_exact(df.dropna(subset=list(required)), [key])
+    return out.withColumns(
+        {c: F.col(c).cast("long") for c in INTEGRAL_CODE_COLS if c in out.columns}
+    )
 
 
 def convert_dates(df: DataFrame) -> DataFrame:
@@ -57,16 +55,16 @@ def convert_dates(df: DataFrame) -> DataFrame:
 
     (reference: I94_SAS_Labels_Descriptions.SAS:966-968,1038-1040,1056,1080)
     """
-    out = df
-    if "arrdate" in df.columns:
-        out = out.withColumn("arrival_date", sas_date_to_date("arrdate"))
-    if "depdate" in df.columns:
-        out = out.withColumn("departure_date", sas_date_to_date("depdate"))
-    if "dtadfile" in df.columns:
-        out = out.withColumn("file_date", parse_char_date("dtadfile", "yyyyMMdd"))
-    if "dtaddto" in df.columns:
-        out = out.withColumn("admitted_until", parse_char_date("dtaddto", "MMddyyyy"))
-    return out
+    derived = {
+        # output column: (source column, expression)
+        "arrival_date": ("arrdate", sas_date_to_date("arrdate")),
+        "departure_date": ("depdate", sas_date_to_date("depdate")),
+        "file_date": ("dtadfile", parse_char_date("dtadfile", "yyyyMMdd")),
+        "admitted_until": ("dtaddto", parse_char_date("dtaddto", "MMddyyyy")),
+    }
+    return df.withColumns(
+        {out: expr for out, (src, expr) in derived.items() if src in df.columns}
+    )
 
 
 def join_dims(df: DataFrame, dims: dict[str, DataFrame]) -> DataFrame:

@@ -14,12 +14,13 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.pqmeta import input_width
+
 
 def dedup_exact(
     df: DataFrame,
     subset: Sequence[str],
     keep_order_by: Sequence | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Keep one row per distinct ``subset`` value.
 
@@ -28,14 +29,17 @@ def dedup_exact(
     shuffle). With it: deterministic winner via min-by window (e.g. keep
     the lowest doc_id), needed whenever results must be reproducible.
 
-    ``num_partitions`` pins the dedup exchange's width plan-side
-    (round-11 width law, sources/pqmeta.py:scaled_width): on a
-    fact-cardinality ``subset`` the session-width window/aggregate holds
-    corpus/N rows per task — the q9 2048× OOM class. The repartition
-    satisfies the window/aggregate distribution, so no second exchange.
+    The dedup exchange is always pinned at the width law derived from
+    ``df``'s own input footers (sources/pqmeta.py:input_width, ~4M rows
+    per reducer, floored at the core count). A session-width exchange
+    fails both ways: at scale each task holds corpus/N rows (the q9
+    2048× OOM class), and at small scale AQE coalesces it to one
+    partition, so everything above the dedup — joins, the partitioned
+    write — runs on one core. AQE leaves an explicit repartition width
+    alone, and the repartition satisfies the window/aggregate
+    distribution, so there is no second exchange.
     """
-    if num_partitions is not None:
-        df = df.repartition(num_partitions, *subset)
+    df = df.repartition(input_width(df), *subset)
     if keep_order_by is None:
         return df.dropDuplicates(list(subset))
     w = Window.partitionBy(*subset).orderBy(*keep_order_by)

@@ -169,17 +169,8 @@ def etl_dedup_first_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference: notebook cell-7 'duplicate data'). Reproducible winner via
     ordered window, not dropDuplicates' arbitrary pick.
     """
-    from .sources.pqmeta import fact_width
-
     e = _t(spark, sf_dir, "events")
-    kept = dedup_exact(
-        e,
-        ["user_id", "event_type"],
-        keep_order_by=[F.col("ts"), F.col("event_id")],
-        # round-11 width law: the dedup window holds every event of a
-        # task's users — footer-scaled width bounds that per task
-        num_partitions=fact_width(spark, sf_dir, "events"),
-    )
+    kept = dedup_exact(e, ["user_id", "event_type"], keep_order_by=[F.col("ts"), F.col("event_id")])
     return kept.select("user_id", "event_type", "event_id", "value")
 
 

@@ -14,6 +14,7 @@ Kafka source with identical downstream code.
 
 from __future__ import annotations
 
+import atexit
 import itertools
 import os
 import shutil
@@ -23,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _MEM_COUNTER = itertools.count()
+# the process whose snapshot root is registered for exit cleanup
+_ROOT_PID: int | None = None
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -169,24 +172,36 @@ def _snapshot_root() -> str:
     left by crashed/killed processes are swept opportunistically —
     without cleanup a long parity/bench harness accumulates one result
     copy per drain and crashed runs litter forever."""
+    global _ROOT_PID
     base = os.path.join(tempfile.gettempdir(), "dec_spark_stream_snap")
-    root = os.path.join(base, str(os.getpid()))
-    first_use = not os.path.isdir(root)
+    pid = os.getpid()
+    root = os.path.join(base, str(pid))
     os.makedirs(root, exist_ok=True)
-    if first_use:
-        import atexit
-
+    if _ROOT_PID != pid:
+        # once per process, whether or not the root pre-existed (a
+        # recycled PID can find a crashed owner's root in place)
+        _ROOT_PID = pid
         atexit.register(shutil.rmtree, root, True)
-        # sweep siblings whose owning process is gone (Linux: /proc/<pid>)
+        # sweep siblings whose owning process is gone
         try:
             for name in os.listdir(base):
-                if name != str(os.getpid()) and name.isdigit() and not os.path.exists(
-                    f"/proc/{name}"
-                ):
+                if name != str(pid) and name.isdigit() and not _pid_alive(int(name)):
                     shutil.rmtree(os.path.join(base, name), ignore_errors=True)
         except OSError:
             pass
     return root
+
+
+def _pid_alive(pid: int) -> bool:
+    """Signal-0 probe, portable across POSIX hosts (``/proc`` is
+    Linux-only). A process owned by another user is alive."""
+    try:
+        os.kill(pid, 0)
+    except (ProcessLookupError, OverflowError):
+        return False
+    except PermissionError:
+        return True
+    return True
 
 
 def tumbling_counts(events: DataFrame, width: str = "1 hour", watermark: str = "2 hours") -> DataFrame:

@@ -4,6 +4,9 @@ on an in-code fixture shaped like the reference's fact table (§1.2)."""
 from __future__ import annotations
 
 import datetime as dt
+import os
+import re
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -53,6 +56,26 @@ def test_parse_sas_value_maps():
     assert maps["i94visa"]["2"] == "Pleasure"
 
 
+# the reference fact's shape (§1.2): SAS numerics are doubles
+I94_SCHEMA = T.StructType(
+    [
+        T.StructField("cicid", T.DoubleType()),
+        T.StructField("i94yr", T.DoubleType()),
+        T.StructField("i94mon", T.DoubleType()),
+        T.StructField("i94cit", T.DoubleType()),
+        T.StructField("i94port", T.StringType()),
+        T.StructField("arrdate", T.DoubleType()),
+        T.StructField("i94mode", T.DoubleType()),
+        T.StructField("i94addr", T.StringType()),
+        T.StructField("depdate", T.DoubleType()),
+        T.StructField("i94visa", T.DoubleType()),
+        T.StructField("count", T.DoubleType()),
+        T.StructField("dtadfile", T.StringType()),
+        T.StructField("dtaddto", T.StringType()),
+    ]
+)
+
+
 @pytest.fixture(scope="module")
 def i94_fixture(spark):
     # 20566.0 = 2016-04-22 as SAS day; schema mimics §1.2 (doubles+strings)
@@ -64,24 +87,7 @@ def i94_fixture(spark):
         (3.0, 2016.0, 4.0, 101.0, "NYC", 20567.0, 9.0, "XX", 20580.0, 3.0, 1.0, "20160423", "10012016"),
         (None, 2016.0, 4.0, 582.0, "NYC", 20567.0, 2.0, "NY", None, 2.0, 1.0, "bad", None),  # null key
     ]
-    schema = T.StructType(
-        [
-            T.StructField("cicid", T.DoubleType()),
-            T.StructField("i94yr", T.DoubleType()),
-            T.StructField("i94mon", T.DoubleType()),
-            T.StructField("i94cit", T.DoubleType()),
-            T.StructField("i94port", T.StringType()),
-            T.StructField("arrdate", T.DoubleType()),
-            T.StructField("i94mode", T.DoubleType()),
-            T.StructField("i94addr", T.StringType()),
-            T.StructField("depdate", T.DoubleType()),
-            T.StructField("i94visa", T.DoubleType()),
-            T.StructField("count", T.DoubleType()),
-            T.StructField("dtadfile", T.StringType()),
-            T.StructField("dtaddto", T.StringType()),
-        ]
-    )
-    return spark.createDataFrame(rows, schema)
+    return spark.createDataFrame(rows, I94_SCHEMA)
 
 
 def _dims(spark):
@@ -203,6 +209,68 @@ def test_join_dims_broadcasts_local_table_scans(spark, i94_fixture, tmp_path):
     assert len(broadcasts) == 5, final
     assert all("LocalTableScan" in b for b in broadcasts), final
     assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+
+
+def _i94_month(spark, tmp_path, n=400):
+    """A one-month I94 fact of ``n`` distinct records plus full-row
+    duplicates, written as several parquet files."""
+    rows = [
+        (float(i), 2016.0, 4.0, 582.0, "NYC", 20566.0 + i % 30, 1.0, "NY", None, 2.0, 1.0,
+         "20160422", "D/S")
+        for i in range(n)
+    ]
+    path = str(tmp_path / "raw")
+    spark.createDataFrame(rows + rows[::10], I94_SCHEMA).repartition(3).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_clean_pins_one_dedup_exchange_at_law_width(spark, tmp_path):
+    """The dedup exchange is an explicit repartition at the footer-derived
+    width (AQE cannot coalesce it to one task), and the aggregate above
+    it adds no second exchange."""
+    from data_engineering_capstone_spark.sources.pqmeta import input_width
+
+    fact = _i94_month(spark, tmp_path)
+    assert len(fact.inputFiles()) == 3
+    width = input_width(fact)
+    assert width == spark.sparkContext.defaultParallelism
+    plan = pipeline.clean(fact)._jdf.queryExecution().executedPlan().toString()
+    exchanges = [line for line in plan.splitlines() if "Exchange" in line]
+    assert len(exchanges) == 1, plan
+    assert re.search(
+        rf"Exchange hashpartitioning\(cicid#\d+, {width}\), REPARTITION_BY_NUM", exchanges[0]
+    ), plan
+    below = plan[plan.index(exchanges[0]):]
+    assert "Aggregate" in plan[: plan.index(exchanges[0])] and "Aggregate" not in below, plan
+
+
+def test_fact_write_runs_on_every_core(spark, tmp_path):
+    """The partitioned fact write of one month produces one part file per
+    core: the writer tasks are the dedup's reducers, not one coalesced
+    task."""
+    from data_engineering_capstone_spark.sources.writers import write_parquet
+
+    named = pipeline.join_dims(
+        pipeline.convert_dates(pipeline.clean(_i94_month(spark, tmp_path))), _dims(spark)
+    )
+    out = str(tmp_path / "fact")
+    write_parquet(named, out, partition_by=["i94yr", "i94mon"])
+    month = os.path.join(out, "i94yr=2016", "i94mon=4")
+    parts = [f for f in os.listdir(month) if f.endswith(".parquet")]
+    assert len(parts) == spark.sparkContext.defaultParallelism
+    assert spark.read.parquet(out).count() == 400
+
+
+def test_clean_digest_matches_session_width_drop_duplicates(spark, i94_fixture):
+    """Pinning the exchange changes where rows are deduplicated, not
+    which rows survive."""
+    want = i94_fixture.dropna(subset=["cicid", "i94yr", "i94mon"]).dropDuplicates(["cicid"])
+    want = want.withColumns(
+        {c: F.col(c).cast("long") for c in pipeline.INTEGRAL_CODE_COLS if c in want.columns}
+    )
+    got = pipeline.clean(i94_fixture)
+    assert got.columns == want.columns
+    assert Counter(map(tuple, got.collect())) == Counter(map(tuple, want.collect()))
 
 
 def test_quality_checks_pass_and_fail(spark, i94_fixture):

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import math
 
 from pyspark.sql import functions as F
 
@@ -548,3 +549,17 @@ def test_keyed_running_sum_date_key(spark):
     gm = {(r["key"], r["uid"]): (r["run"], r["n"]) for r in got.collect()}
     wm = {(r["key"], r["uid"]): (r["run"], r["n"]) for r in want.collect()}
     assert gm == wm
+
+
+def test_dedup_exact_collapses_signed_zero_and_nan_keys(spark, tmp_path):
+    """0.0/-0.0 and NaN keys are one key each, as in SQL GROUP BY: the
+    pinned repartition must not split a normalized key across reducers."""
+    rows = [(0.0, i) for i in range(5)] + [(-0.0, i) for i in range(5, 10)]
+    rows += [(math.nan, i) for i in range(10, 15)] + [(float(k), 100 + k) for k in range(1, 40)]
+    path = str(tmp_path / "keys")
+    spark.createDataFrame(rows, "k double, v int").repartition(3).write.parquet(path)
+    df = spark.read.parquet(path)
+    for out in (dedup_exact(df, ["k"]), dedup_exact(df, ["k"], keep_order_by=[F.col("v")])):
+        keys = [r["k"] for r in out.collect()]
+        assert len(keys) == 41
+        assert sum(k == 0.0 for k in keys) == 1 and sum(math.isnan(k) for k in keys) == 1

@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 from data_engineering_capstone_spark.sources.pqmeta import (
+    input_width,
     parquet_row_count,
     parquet_total_bytes,
     scaled_width,
@@ -176,3 +177,58 @@ def test_row_groups_gate_reprobes_table_rewritten_in_place(tmp_path, monkeypatch
     assert pqmeta.row_groups_at_least(out, 3) is True
     assert opened == [part]  # probed again, not served from the cache
     assert list(pqmeta._RG_GATE_CACHE) == [out]
+
+
+
+def _footer_rows_stub(monkeypatch, rows_per_file):
+    """Pretend every readable input file holds ``rows_per_file`` rows, so
+    the law's growth shows without a multi-million-row fixture."""
+    from data_engineering_capstone_spark.sources import pqmeta
+
+    def rows(f):
+        assert os.path.isfile(f), f
+        return rows_per_file
+
+    monkeypatch.setattr(pqmeta, "_footer_rows", rows)
+
+
+def test_input_width_applies_the_law_to_input_footers(spark, sf_dir, tmp_path, monkeypatch):
+    """input_width is scaled_width over df.inputFiles(): the same
+    formula, with percent-encoded file: URIs mapped back to paths."""
+    out = str(tmp_path / "two words")
+    spark.read.parquet(f"{sf_dir}/nation.parquet").repartition(3).write.parquet(out)
+    df = spark.read.parquet(out).filter("n_nationkey >= 0")
+    assert len(df.inputFiles()) == 3 and all("%20" in u for u in df.inputFiles())
+    par = spark.sparkContext.defaultParallelism
+    assert input_width(df) == par
+    _footer_rows_stub(monkeypatch, 10_000_000)
+    # 30M rows at ~4M rows per reducer
+    assert input_width(df) == scaled_width(out, par) == max(par, 8)
+
+
+def test_input_width_falls_back_to_the_floor(spark, sf_dir, tmp_path, monkeypatch):
+    """No file inputs, a non-file: scheme, or an unreadable footer: the
+    parallelism floor, even where the law would give more."""
+    from data_engineering_capstone_spark.sources.readers import local_frame
+
+    par = spark.sparkContext.defaultParallelism
+    df = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    not_parquet = tmp_path / "notes.parquet"
+    not_parquet.write_text("not a footer")
+    for uris in ([not_parquet.as_uri()], [(tmp_path / "gone.parquet").as_uri()]):
+        monkeypatch.setattr(df, "inputFiles", lambda uris=uris: uris)
+        assert input_width(df) == par, uris
+    monkeypatch.undo()
+
+    _footer_rows_stub(monkeypatch, 10**9)
+    assert input_width(df) == max(par, 251)  # the law, where it applies
+    local = local_frame(spark, [(i,) for i in range(50)], "k long")
+    assert local.inputFiles() == []
+    assert input_width(local) == par
+    assert input_width(spark.range(50)) == par
+    for uris in (
+        ["hdfs://namenode:8020/warehouse/nation.parquet"],
+        [f"file://{sf_dir}/nation.parquet", "s3a://bucket/nation.parquet"],
+    ):
+        monkeypatch.setattr(df, "inputFiles", lambda uris=uris: uris)
+        assert input_width(df) == par, uris

@@ -3,6 +3,11 @@
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import tempfile
+
 from pyspark.sql import functions as F
 
 from data_engineering_capstone_spark.sources.testdata import load_table
@@ -606,3 +611,35 @@ def test_streaming_count_min_survives_checkpoint_restart(spark, tmp_path):
     both = spark.createDataFrame(batch1 + batch2, "user_id long")
     want = {tuple(r) for r in count_min_table(both, "user_id").collect()}
     assert got == want and len(got) > 0
+
+
+def test_snapshot_root_sweep_keeps_live_sibling_roots(tmp_path, monkeypatch):
+    """The stale-root sweep removes a dead PID's root and keeps live
+    ones, including a process the signal probe may not signal (another
+    user's), without consulting Linux-only /proc."""
+    from data_engineering_capstone_spark.streaming import windows
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(windows, "_ROOT_PID", None, raising=False)
+    base = tmp_path / "dec_spark_stream_snap"
+    dead = subprocess.Popen([sys.executable, "-c", ""])
+    dead.wait()
+    live = subprocess.Popen([sys.executable, "-c", "import time; time.sleep(60)"])
+    foreign = 99_999_999  # no such PID; the probe is told it is not ours to signal
+    kill = os.kill
+
+    def probe(pid, sig):
+        if pid == foreign:
+            raise PermissionError(pid)
+        return kill(pid, sig)
+
+    monkeypatch.setattr(os, "kill", probe)
+    for pid in (dead.pid, live.pid, foreign):
+        (base / str(pid)).mkdir(parents=True)
+    try:
+        root = windows._snapshot_root()
+    finally:
+        live.kill()
+        live.wait()
+    assert root == str(base / str(os.getpid()))
+    assert set(os.listdir(base)) == {str(os.getpid()), str(live.pid), str(foreign)}
