@@ -75,33 +75,13 @@ def _driver_certified() -> set[str]:
 _REWRITE_ROUND = 12
 
 _REWRITTEN_SINCE_CERT: tuple[str, ...] = (
-    # (r11 rewrites certified by CORRECTNESS_r11.json — 50 names: q3/q5/
-    # width-law relational, scalar_*2 families, etl_*, agg_corr_covar,
-    # minhash/ngram/cosine llm entries, fan-out window/join families —
-    # all pruned per this list's contract.  The round-11 verdict also
-    # flagged the old comment labeling filter_predicates_part /
-    # window_rank_customers / skew_salted_agg etc. as "gated scan
-    # fan-out": those were final-sort-sweep entries (fan-out only ever
-    # touched queries_llm/udf call sites); they are certified and pruned
-    # now, and the groups below carry their actual mechanism.)
+    # (CORRECTNESS_r11.json certified 50 r11 rewrites and
+    # CORRECTNESS_r12.json another 50 — the r11 build rewrites, the r12
+    # streaming snapshot rework, the ts_* and llm_* final-sort sweep and
+    # the fan-out gate callers — all pruned per this list's contract.)
     #
-    # round-11 build rewrites, not yet driver-certified:
-    "llm_source_cap",         # adaptive tiny-quota path in hash_quota_select
-    "llm_stratified_sample",  # null-safe counts join (ADVICE r10)
+    # round-11 build rewrite, not yet driver-certified:
     "sql_lateral_topk",       # in-lateral custkey bound
-    "llm_temperature_mix",    # hash_quota_select byte-gate + histogram prefix
-    "llm_mix_rebalance",      # hash_quota_select byte-gate + histogram prefix
-    # round-12 streaming snapshot rework (driver-resident memory sink →
-    # executor-side foreachBatch parquet snapshot; result sets identical,
-    # drain machinery changed) — supersedes the r11 localCheckpoint form:
-    "stream_tumbling_counts", "stream_sliding_avg", "stream_session_windows",
-    "stream_dedup_watermark", "stream_static_join_segments",
-    "stream_stateful_user_stats", "stream_count_min_top_users",
-    "stream_minhash_dedup", "stream_stream_join", "stream_psi_drift",
-    "stream_custom_source_replay",
-    # round-12: committed avro sink output now read DISTRIBUTED via the
-    # avroplain batch reader (driver reads only the _commits log):
-    "stream_custom_sink_avro",
     # round-11 final-sort sweep (display-only orderBy removed from
     # fact-grain outputs), not yet driver-certified:
     "udf_pandas_scalar", "udf_apply_in_pandas", "udf_apply_in_arrow",
@@ -109,26 +89,10 @@ _REWRITTEN_SINCE_CERT: tuple[str, ...] = (
     "mm_audio_energy", "mm_frame_sample", "mm_binary_ingest",
     "mm_resize_pipeline", "mm_wav_energy", "mm_bmp_stats",
     "mm_phash_near_dup", "mm_audio_fingerprint_dedup",
-    "llm_embedding_near_dup", "llm_ann_lsh",
-    "llm_fingerprint", "llm_dedup_clusters", "llm_ann_ivf",
-    "llm_gopher_rules", "llm_html_strip", "llm_ann_ivf_pq",
-    "llm_pq_index_delta", "llm_semantic_dedup", "llm_pii_redaction",
-    "llm_chunk_documents", "llm_repetition_filter", "llm_decontamination",
-    "llm_unigram_logprob", "llm_perplexity_filter", "llm_dedup_canonical",
-    "llm_duplicate_spans", "llm_quality_classifier",
-    "llm_bloom_decontamination",
-    "llm_blocklist_filter", "llm_span_dedup_clean",
-    "llm_span_decontamination", "llm_bpe_encode", "llm_url_dedup_canonical",
-    "llm_ngram_novelty", "llm_pack_sequences",
-    "ts_gapfill_ffill", "ts_sessionize_batch", "ts_weighted_moving_avg",
-    "ts_rolling_anomaly", "ts_rolling_median",
+    "ts_rolling_median",
     # round-11 gated scan fan-out (guide §2.5; pqmeta.fanout_starved_scan),
-    # not yet driver-certified (several carry the sort sweep too):
-    "llm_text_stats", "llm_mojibake_detect",
-    # round-12: the fan-out GATE machinery itself was rewritten
-    # (row_groups_at_least short-circuit + memo cache), so these two
-    # r11-certified fan-out callers re-enter the window with it:
-    "llm_ngram_jaccard", "llm_ngram_containment",
+    # not yet driver-certified:
+    "llm_mojibake_detect",
 )
 
 

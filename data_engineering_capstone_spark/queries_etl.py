@@ -10,7 +10,6 @@ lives in ``etl/pipeline.py`` (unit-tested on an I94 fixture).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -20,7 +19,7 @@ from .functions.dates import date_parts, date_to_sas_day, parse_char_date, sas_d
 from .operators.dedup import dedup_exact
 from .operators.pivot import pivot_wide
 from .operators.relational import code_to_name
-from .session import prep
+from .session import prep, scratch_dir
 from .sources.readers import local_frame
 from .sources.testdata import load_table
 from .sources.writers import write_parquet, write_zordered
@@ -302,7 +301,7 @@ def etl_partitioned_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     o = _t(spark, sf_dir, "orders").withColumn(
         "order_year", F.year("o_orderdate").cast("int")
     )
-    out = os.path.join(tempfile.gettempdir(), "dec_spark_sink", os.path.basename(sf_dir.rstrip("/")), "orders_by_year")
+    out = scratch_dir(spark, "sink", os.path.basename(sf_dir.rstrip("/")), "orders_by_year")
     write_parquet(o, out, partition_by=["order_year"])
     back = spark.read.parquet(out)
     return (
@@ -414,9 +413,7 @@ def etl_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count_if(F.col("l_discount") > 0.05).alias("n_discounted"),
         F.sum(F.col("l_extendedprice").cast("decimal(12,2)")).alias("total_price"),
     )
-    out = os.path.join(
-        tempfile.gettempdir(), "dec_spark_sink", os.path.basename(sf_dir.rstrip("/")), "observed"
-    )
+    out = scratch_dir(spark, "sink", os.path.basename(sf_dir.rstrip("/")), "observed")
     write_parquet(observed, out)  # the one action; metrics piggyback on it
     m = obs.get
     return local_frame(
@@ -851,12 +848,7 @@ def etl_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_scale_ops.py.
     """
     li = _t(spark, sf_dir, "lineitem")
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "dec_spark_sink",
-        os.path.basename(sf_dir.rstrip("/")),
-        "lineitem_zorder",
-    )
+    out = scratch_dir(spark, "sink", os.path.basename(sf_dir.rstrip("/")), "lineitem_zorder")
     write_zordered(li, out, ["l_partkey", "l_suppkey"], n_files=16)
     back = spark.read.parquet(out)
     probed = back.filter(
@@ -925,10 +917,7 @@ def etl_time_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     table_dir = os.path.join(
-        tempfile.gettempdir(),
-        "dec_spark_sink",
-        os.path.basename(sf_dir.rstrip("/")),
-        "orders_versioned",
+        scratch_dir(spark, "sink", os.path.basename(sf_dir.rstrip("/"))), "orders_versioned"
     )
     shutil.rmtree(table_dir, ignore_errors=True)
     assert write_version(a, table_dir) == 1

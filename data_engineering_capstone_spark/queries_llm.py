@@ -33,7 +33,7 @@ from .llm.text import (
     stopword_ratio,
 )
 from .functions.strings import ngrams, token_count
-from .session import prep
+from .session import prep, scratch_dir
 from .sources.readers import local_frame
 from .sources.testdata import load_table
 
@@ -220,9 +220,6 @@ def llm_minhash_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     family); incremental == full-recompute is pinned by
     tests/test_llm.py::test_minhash_index_delta_equals_full_recompute.
     """
-    import os
-    import tempfile
-
     from .llm.dedup import minhash_band_index, minhash_delta_pairs
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -233,14 +230,13 @@ def llm_minhash_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     new = d.filter(F.col("doc_id") % 10 == 0).unionByName(planted)
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"dec_spark_minhash_idx_{os.getpid()}"
-    )
+    index_dir = scratch_dir(spark, "minhash_idx", "index")
+    sigs_dir = scratch_dir(spark, "minhash_idx", "sigs")
     index, sigs = minhash_band_index(old, "text", "doc_id")
-    index.write.mode("overwrite").parquet(os.path.join(base, "index"))
-    sigs.write.mode("overwrite").parquet(os.path.join(base, "sigs"))
-    index_r = spark.read.parquet(os.path.join(base, "index"))
-    sigs_r = spark.read.parquet(os.path.join(base, "sigs"))
+    index.write.mode("overwrite").parquet(index_dir)
+    sigs.write.mode("overwrite").parquet(sigs_dir)
+    index_r = spark.read.parquet(index_dir)
+    sigs_r = spark.read.parquet(sigs_dir)
 
     pairs = minhash_delta_pairs(
         new, "text", "doc_id", index_r, sigs_r, threshold=0.35

@@ -11,14 +11,13 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .catalog import query
-from .session import prep
+from .session import prep, scratch_dir
 from .sources.readers import read_csv, read_json, read_orc, read_semicolon_csv
 from .sources.testdata import load_table
 
@@ -26,12 +25,6 @@ from .sources.testdata import load_table
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     prep(spark)
     return load_table(spark, sf_dir, name)
-
-
-def _tmp(sf_dir: str, leaf: str) -> str:
-    return os.path.join(
-        tempfile.gettempdir(), "dec_spark_fmt", os.path.basename(sf_dir.rstrip("/")), leaf
-    )
 
 
 _NATION_AGG = """
@@ -89,10 +82,10 @@ def scan_parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
     footer read per file, so production defaults it OFF and flips it on
     for drifted datasets; at scale, prefer an explicit schema). The
     oracle recomputes each batch's expected profile from the source
-    nation view. Fixture dir is per-pid (no cross-process staleness).
+    nation view.
     """
     n = _t(spark, sf_dir, "nation")
-    path = _tmp(sf_dir, f"schema_evo_{os.getpid()}")
+    path = scratch_dir(spark, "fmt", os.path.basename(sf_dir.rstrip("/")), "schema_evo")
     shutil.rmtree(path, ignore_errors=True)
     n.select("n_nationkey", "n_name", F.lit(1).alias("batch")).write.parquet(path)
     n.select(
@@ -145,8 +138,9 @@ def scan_npy_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     rows = e.select("vec_id", "embedding").orderBy("vec_id").collect()
     mat = np.array([r["embedding"] for r in rows], dtype=np.float32)
-    path = _tmp(sf_dir, f"embeddings_{os.getpid()}.npy")
-    os.makedirs(os.path.dirname(path), exist_ok=True)
+    path = os.path.join(
+        scratch_dir(spark, "fmt", os.path.basename(sf_dir.rstrip("/"))), "embeddings.npy"
+    )
     write_npy(path, mat)
     try:
         spark.dataSource.register(NpyDataSource)
@@ -178,7 +172,7 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference: dags/transform/airport.py:5 does the opposite).
     """
     c = _t(spark, sf_dir, "customer")
-    path = _tmp(sf_dir, "customer_csv")
+    path = scratch_dir(spark, "fmt", os.path.basename(sf_dir.rstrip("/")), "customer_csv")
     shutil.rmtree(path, ignore_errors=True)
     c.write.mode("overwrite").option("header", True).csv(path)
     back = read_csv(spark, path, schema=CUSTOMER_SCHEMA)
@@ -191,7 +185,7 @@ def scan_semicolon_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference: us-cities-demographics.csv:1) through the same round trip.
     """
     c = _t(spark, sf_dir, "customer")
-    path = _tmp(sf_dir, "customer_scsv")
+    path = scratch_dir(spark, "fmt", os.path.basename(sf_dir.rstrip("/")), "customer_scsv")
     shutil.rmtree(path, ignore_errors=True)
     c.write.mode("overwrite").option("header", True).option("sep", ";").csv(path)
     back = read_semicolon_csv(spark, path, schema=CUSTOMER_SCHEMA)
@@ -203,7 +197,7 @@ def scan_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C-scan: JSON lines round trip with explicit schema (schema-on-read
     JSON without inference: one scan, stable types)."""
     c = _t(spark, sf_dir, "customer")
-    path = _tmp(sf_dir, "customer_json")
+    path = scratch_dir(spark, "fmt", os.path.basename(sf_dir.rstrip("/")), "customer_json")
     shutil.rmtree(path, ignore_errors=True)
     c.write.mode("overwrite").json(path)
     back = read_json(spark, path, schema=CUSTOMER_SCHEMA)
@@ -220,7 +214,7 @@ def scan_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.readers import read_xml
 
     c = _t(spark, sf_dir, "customer")
-    path = _tmp(sf_dir, "customer_xml")
+    path = scratch_dir(spark, "fmt", os.path.basename(sf_dir.rstrip("/")), "customer_xml")
     shutil.rmtree(path, ignore_errors=True)
     c.write.mode("overwrite").option("rowTag", "customer").format("xml").save(path)
     back = read_xml(spark, path, row_tag="customer", schema=CUSTOMER_SCHEMA)
@@ -232,7 +226,7 @@ def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C-scan: ORC round trip — the other columnar format (predicate
     pushdown + pruning like parquet)."""
     c = _t(spark, sf_dir, "customer")
-    path = _tmp(sf_dir, "customer_orc")
+    path = scratch_dir(spark, "fmt", os.path.basename(sf_dir.rstrip("/")), "customer_orc")
     shutil.rmtree(path, ignore_errors=True)
     c.write.mode("overwrite").orc(path)
     back = read_orc(spark, path)
@@ -258,14 +252,10 @@ def bucketed_join_zero_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle into a map-side merge.
     """
     prep(spark)
-    # per-process db/location: two concurrent processes (driver
-    # correctness + bench, or parity + explain_audit) sharing one fixed
-    # location clear each other's table files mid-query — observed as a
-    # flaky plan assertion in round 4. Within a process the tableExists
-    # cache still avoids rewrites.
-    sf_tag = f"{os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}_{os.getpid()}"
+    # the tableExists cache avoids rewrites within a session
+    sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     db = f"bucketdb_{sf_tag}"
-    loc = os.path.join(tempfile.gettempdir(), "dec_spark_bucketdb", sf_tag)
+    loc = scratch_dir(spark, "bucketdb", sf_tag)
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
     l_tbl, o_tbl = f"{db}.lineitem_b", f"{db}.orders_b"
     if not spark.catalog.tableExists(l_tbl):
@@ -286,8 +276,8 @@ def bucketed_join_zero_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         # li.count() — the count() added a full extra fact scan per
         # first materialization (round-9 ADVICE). Note the count is read
         # once at first write: a warehouse that outlives a scale change
-        # must be dropped and rebuilt (the per-process db tag above
-        # already guarantees that here).
+        # must be dropped and rebuilt (the per-scale db name and the
+        # per-process location above already guarantee that here).
         from .sources.pqmeta import parquet_row_count
 
         try:
@@ -331,7 +321,7 @@ def scan_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"
     )
-    db_dir = _tmp(sf_dir, f"jdbc_{os.getpid()}")
+    db_dir = scratch_dir(spark, "fmt", os.path.basename(sf_dir.rstrip("/")), "jdbc")
     shutil.rmtree(db_dir, ignore_errors=True)
     url = f"jdbc:derby:{db_dir}/db;create=true"
     driver = "org.apache.derby.jdbc.EmbeddedDriver"
@@ -385,8 +375,7 @@ def scan_sas_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("ACCTBAL", "num", 8),
         ("MKTSEG", "char", 16),
     ]
-    path = _tmp(sf_dir, "customer_xpt")
-    os.makedirs(path, exist_ok=True)
+    path = scratch_dir(spark, "fmt", os.path.basename(sf_dir.rstrip("/")), "customer_xpt")
     fp = os.path.join(path, "customer.xpt")
     write_xport(fp, cols, rows, dsname="CUSTOMER")
     back = read_sas(spark, fp).select(
@@ -426,8 +415,7 @@ def scan_xport_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("ACCTBAL", "num", 8),
         ("MKTSEG", "char", 16),
     ]
-    path = _tmp(sf_dir, "customer_xpt_ds")
-    os.makedirs(path, exist_ok=True)
+    path = scratch_dir(spark, "fmt", os.path.basename(sf_dir.rstrip("/")), "customer_xpt_ds")
     fp = os.path.join(path, "customer.xpt")
     write_xport(fp, cols, rows, dsname="CUSTOMER")
     try:
@@ -482,8 +470,7 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines = ["k,price"] + [
         f"{k},{'NOT_A_NUMBER' if k % 10 == 0 else '1.5'}" for k in sorted(keys)
     ]
-    path = _tmp(sf_dir, "malformed_csv")
-    os.makedirs(path, exist_ok=True)
+    path = scratch_dir(spark, "fmt", os.path.basename(sf_dir.rstrip("/")), "malformed_csv")
     with open(os.path.join(path, "data.csv"), "w") as f:
         f.write("\n".join(lines))
 
@@ -546,7 +533,7 @@ def scan_parquet_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _t(spark, sf_dir, "supplier")
     outs = []
     for codec in ["lz4", "snappy", "zstd"]:
-        path = _tmp(sf_dir, f"supplier_{codec}")
+        path = scratch_dir(spark, "fmt", os.path.basename(sf_dir.rstrip("/")), f"supplier_{codec}")
         shutil.rmtree(path, ignore_errors=True)
         s.write.option("compression", codec).parquet(path)
         back = spark.read.parquet(path)
@@ -588,7 +575,7 @@ def scan_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.dataSource.register(AvroPlainDataSource)
     except Exception:
         pass  # already registered in this session
-    path = _tmp(sf_dir, "customer_avro")
+    path = scratch_dir(spark, "fmt", os.path.basename(sf_dir.rstrip("/")), "customer_avro")
     # Fixture written DISTRIBUTED (round-3 verdict: the old driver-side
     # collect + single-threaded encode dominated the entry's recorded
     # time at sf0.1 — 17.4 s of fixture for the scan under test; now
@@ -648,8 +635,7 @@ def scan_sas7bdat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("ACCTBAL", "num", 8),
         ("MKTSEG", "char", 16),
     ]
-    path = _tmp(sf_dir, "customer_sas7bdat")
-    os.makedirs(path, exist_ok=True)
+    path = scratch_dir(spark, "fmt", os.path.basename(sf_dir.rstrip("/")), "customer_sas7bdat")
     fp = os.path.join(path, "customer.sas7bdat")
     write_sas7bdat(fp, cols, rows, dataset="CUSTOMER", page_size=16384)
     back = read_sas(spark, fp).select(
@@ -684,7 +670,7 @@ def sink_avro_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.dataSource.register(AvroPlainDataSource)
     except Exception:
         pass  # already registered in this session
-    out = _tmp(sf_dir, "customer_avro_sink")
+    out = scratch_dir(spark, "fmt", os.path.basename(sf_dir.rstrip("/")), "customer_avro_sink")
     (
         c.repartition(4)
         .write.format("avroplain")

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import query
-from .session import prep
+from .session import prep, scratch_dir
 from .sources.testdata import register_views
 
 
@@ -356,18 +356,13 @@ def sql_managed_table_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep(spark)
     register_views(spark, sf_dir)
     import shutil
-    import tempfile
 
-    # per-process name+location: concurrent harness processes sharing a
-    # fixed location clear each other's files mid-query (see the
-    # bucketed-join entry's note)
-    tbl = f"dec_spark_nations_dml_{os.getpid()}"
+    tbl = "dec_spark_nations_dml"
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    # explicit /tmp location: the default warehouse lives under the
+    # explicit scratch location: the default warehouse lives under the
     # driver process CWD (unknown/possibly read-only in the harness),
-    # and on-disk locations outlive the in-memory catalog across
-    # processes — clear before CREATE
-    loc = os.path.join(tempfile.gettempdir(), "dec_spark_warehouse", tbl)
+    # and dropping a LOCATION table leaves its files — clear before CREATE
+    loc = os.path.join(scratch_dir(spark, "warehouse"), tbl)
     shutil.rmtree(loc, ignore_errors=True)
     spark.sql(
         f"CREATE TABLE {tbl} USING parquet LOCATION '{loc}' "

@@ -13,13 +13,12 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import query
-from .session import prep
+from .session import prep, scratch_dir
 from .sources.readers import local_frame
 from .streaming.windows import (
     dedup_within_watermark,
@@ -149,7 +148,7 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     events = _events(spark, sf_dir)
     out_dir = os.path.join(
-        tempfile.gettempdir(), "dec_spark_stream", os.path.basename(sf_dir.rstrip("/")), "events_sink"
+        scratch_dir(spark, "stream", os.path.basename(sf_dir.rstrip("/"))), "events_sink"
     )
     shutil.rmtree(out_dir, ignore_errors=True)
     run_foreach_batch_to_parquet(events, out_dir)
@@ -270,23 +269,16 @@ def stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the round-6 stream_events lesson applies verbatim: stage
     # nothing, monitor it directly (a symlinked/copied DIRECTORY inside
     # a stage dir would be invisible to the non-recursive lister).
-    import shutil
-    import tempfile
-
     src_path = f"{sf_dir}/documents.parquet"
     if os.path.isdir(src_path):
         src_dir = src_path
     else:
-        # staging dir keyed by pid (concurrent harness processes don't
-        # race each other) and the copy lands via os.replace (atomic — a
-        # concurrent reader never opens a half-written parquet). Staleness
-        # guard: reuse only if mtime+size still match the source, so a
-        # regenerated testdata set is re-staged instead of read stale.
+        # the copy lands via os.replace (atomic — a reader never opens a
+        # half-written parquet). Staleness guard: reuse only if mtime+size
+        # still match the source, so a regenerated testdata set is
+        # re-staged instead of read stale.
         sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-        src_dir = os.path.join(
-            tempfile.gettempdir(), "dec_spark_stream_docs", f"{sf_tag}_{os.getpid()}"
-        )
-        os.makedirs(src_dir, exist_ok=True)
+        src_dir = scratch_dir(spark, "stream_docs", sf_tag)
         dst = os.path.join(src_dir, "documents.parquet")
         st = os.stat(src_path)
         fresh = (
@@ -459,7 +451,7 @@ def stream_custom_source_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the complete-mode state through driver Python objects every drain
     from .streaming.windows import read_snapshot, snapshot_sink
 
-    snap_dir, _snap = snapshot_sink("complete")
+    snap_dir, _snap = snapshot_sink(spark, "complete")
     try:
         q = (
             agg.writeStream.foreachBatch(_snap)
@@ -507,8 +499,7 @@ def stream_custom_sink_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     except Exception:
         pass  # already registered in this session
     out_dir = os.path.join(
-        tempfile.gettempdir(), "dec_spark_stream",
-        os.path.basename(sf_dir.rstrip("/")), "events_avro_sink",
+        scratch_dir(spark, "stream", os.path.basename(sf_dir.rstrip("/"))), "events_avro_sink"
     )
     shutil.rmtree(out_dir, ignore_errors=True)
     ckpt = out_dir + "_ckpt"

@@ -12,13 +12,24 @@ concern becomes a Spark conf:
   AQE's coalescing with a high initial value).
 * UTC session timezone so timestamp semantics match ANSI-SQL oracles.
 * Arrow enabled so Pandas-UDF operators (LLM tier) use vectorized transfer.
+
+Scratch files (format round trips, sinks, stream snapshots) all live under
+``scratch_dir``: the reference's S3 is reachable from the driver and every
+executor, and the one local equivalent is the tempdir of a ``local[N]`` or
+``local-cluster`` master.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
+
+# the process whose scratch root has been reset and registered for removal
+_SCRATCH_PID: int | None = None
 
 
 def get_spark(
@@ -65,3 +76,58 @@ def prep(spark: SparkSession) -> SparkSession:
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark
+
+
+def scratch_dir(spark: SparkSession, *parts: str) -> str:
+    """``<tempdir>/dec_spark/<pid>/<parts...>``, created.
+
+    The root is per process, so concurrent harness processes never clear
+    files a lazy DataFrame of another process still reads. It is removed
+    at interpreter exit, when the DataFrames reading it are dead.
+
+    Raises on a master other than ``local``/``local[N]``/``local-cluster``:
+    elsewhere the driver's tempdir is not storage the executors share, and
+    a read would see a partial or empty snapshot instead of failing.
+    """
+    master = spark.sparkContext.master
+    if not master.startswith("local"):
+        raise RuntimeError(
+            f"scratch_dir: master {master!r} is not local; scratch lives in the "
+            "driver's tempdir, which only local[N] and local-cluster executors share"
+        )
+    path = os.path.join(_scratch_root(), *parts)
+    os.makedirs(path, exist_ok=True)
+    return path
+
+
+def _scratch_root() -> str:
+    """This process's root; reset, registered and sibling-swept on first use."""
+    global _SCRATCH_PID
+    base = os.path.join(tempfile.gettempdir(), "dec_spark")
+    pid = os.getpid()
+    root = os.path.join(base, str(pid))
+    if _SCRATCH_PID != pid:
+        _SCRATCH_PID = pid
+        # an existing root was left by a crashed process whose pid this one reuses
+        shutil.rmtree(root, ignore_errors=True)
+        atexit.register(shutil.rmtree, root, True)
+        # roots of crashed or killed processes are never removed at exit
+        try:
+            for name in os.listdir(base):
+                if name != str(pid) and name.isdigit() and not _pid_alive(int(name)):
+                    shutil.rmtree(os.path.join(base, name), ignore_errors=True)
+        except OSError:
+            pass
+    return root
+
+
+def _pid_alive(pid: int) -> bool:
+    """Signal-0 probe, portable across POSIX hosts (``/proc`` is
+    Linux-only). A process owned by another user is alive."""
+    try:
+        os.kill(pid, 0)
+    except (ProcessLookupError, OverflowError):
+        return False
+    except PermissionError:
+        return True
+    return True

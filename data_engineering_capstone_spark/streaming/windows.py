@@ -14,18 +14,16 @@ Kafka source with identical downstream code.
 
 from __future__ import annotations
 
-import atexit
 import itertools
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import scratch_dir
+
 _MEM_COUNTER = itertools.count()
-# the process whose snapshot root is registered for exit cleanup
-_ROOT_PID: int | None = None
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -50,10 +48,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         # The testdata ships a single parquet FILE; the file streaming
         # source requires a directory to monitor. Stage a symlink
         # directory — zero copy, still read-only on the source data.
-        stage = os.path.join(
-            tempfile.gettempdir(), "dec_spark_stream_src", os.path.basename(sf_dir.rstrip("/"))
-        )
-        os.makedirs(stage, exist_ok=True)
+        stage = scratch_dir(spark, "stream_src", os.path.basename(sf_dir.rstrip("/")))
         link = os.path.join(stage, "events.parquet")
         if not os.path.exists(link):
             try:
@@ -118,12 +113,11 @@ def run_available_now(
     # call, later stream runs can't touch it), executor-loss-safe
     # (re-readable from disk), and never driver-resident.
     #
-    # Deployment note: like ANY bare-path Spark write, the snapshot dir
-    # must be on storage every executor and the driver can reach. On
-    # local[N] / local-cluster on one box, the process tempdir is that;
-    # a real cluster points this at HDFS/S3 (one conf, same code) — the
-    # standard contract for every file sink in this repo.
-    snap_dir, _snapshot = snapshot_sink(output_mode)
+    # Deployment contract: like any bare-path Spark write, the snapshot
+    # dir must be on storage every executor and the driver can reach.
+    # Only local[N] and local-cluster masters share the driver's tempdir,
+    # so session.scratch_dir raises on any other master.
+    snap_dir, _snapshot = snapshot_sink(spark_, output_mode)
     try:
         q = (
             stream_df.writeStream.foreachBatch(_snapshot)
@@ -138,16 +132,13 @@ def run_available_now(
     return read_snapshot(spark_, snap_dir, stream_df.schema)
 
 
-def snapshot_sink(output_mode: str):
+def snapshot_sink(spark: SparkSession, output_mode: str):
     """(snap_dir, foreachBatch fn) for an executor-side parquet snapshot
     of a drained stream — ONE implementation of the per-batch write
     semantics (complete overwrites the full state, append/update
     accumulate emitted rows) shared by every drain in this module and
     by queries_streaming's custom-source replay."""
-    snap_dir = tempfile.mkdtemp(
-        prefix=f"snap_{next(_MEM_COUNTER)}_",
-        dir=_snapshot_root(),
-    )
+    snap_dir = scratch_dir(spark, "stream_snap", str(next(_MEM_COUNTER)))
     write_mode = "overwrite" if output_mode == "complete" else "append"
 
     def _snapshot(batch_df: DataFrame, _batch_id: int) -> None:
@@ -163,45 +154,6 @@ def read_snapshot(spark, snap_dir: str, schema) -> DataFrame:
     error), so genuine read failures — corrupt footer, filesystem — are
     left to RAISE instead of being masked as an empty result."""
     return spark.read.schema(schema).parquet(snap_dir)
-
-
-def _snapshot_root() -> str:
-    """Per-process snapshot root (concurrent harness processes don't
-    race each other). The process's own root is removed at interpreter
-    exit (the returned DataFrames are dead by then), and stale roots
-    left by crashed/killed processes are swept opportunistically —
-    without cleanup a long parity/bench harness accumulates one result
-    copy per drain and crashed runs litter forever."""
-    global _ROOT_PID
-    base = os.path.join(tempfile.gettempdir(), "dec_spark_stream_snap")
-    pid = os.getpid()
-    root = os.path.join(base, str(pid))
-    os.makedirs(root, exist_ok=True)
-    if _ROOT_PID != pid:
-        # once per process, whether or not the root pre-existed (a
-        # recycled PID can find a crashed owner's root in place)
-        _ROOT_PID = pid
-        atexit.register(shutil.rmtree, root, True)
-        # sweep siblings whose owning process is gone
-        try:
-            for name in os.listdir(base):
-                if name != str(pid) and name.isdigit() and not _pid_alive(int(name)):
-                    shutil.rmtree(os.path.join(base, name), ignore_errors=True)
-        except OSError:
-            pass
-    return root
-
-
-def _pid_alive(pid: int) -> bool:
-    """Signal-0 probe, portable across POSIX hosts (``/proc`` is
-    Linux-only). A process owned by another user is alive."""
-    try:
-        os.kill(pid, 0)
-    except (ProcessLookupError, OverflowError):
-        return False
-    except PermissionError:
-        return True
-    return True
 
 
 def tumbling_counts(events: DataFrame, width: str = "1 hour", watermark: str = "2 hours") -> DataFrame:

@@ -13,6 +13,13 @@ pins its exchange at the width derived from the input's parquet footers
 plans a session-width exchange that AQE may coalesce to a single task.
 Streaming ``dropDuplicatesWithinWatermark`` is a different method and
 is exempt.
+
+Every scratch path comes from ``session.scratch_dir``, the one place that
+decides where scratch lives: under a per-process root that is removed at
+exit, and only on a master whose executors share the driver's tempdir.
+A ``gettempdir``, ``mkdtemp`` or ``getpid`` anywhere else places scratch
+by its own rule, which a non-local master turns into a silent partial
+read, and which a second process can delete under a lazy DataFrame.
 """
 
 from __future__ import annotations
@@ -25,6 +32,7 @@ import data_engineering_capstone_spark as pkg
 PKG_DIR = os.path.dirname(pkg.__file__)
 ALLOWED = {("sources/readers.py", "local_frame"), ("sources/readers.py", "read_sas")}
 DEDUP_ALLOWED = {("operators/dedup.py", "dedup_exact")}
+SCRATCH_ALLOWED = {("session.py", "scratch_dir"), ("session.py", "_scratch_root")}
 
 
 def _method_calls(method: str):
@@ -61,3 +69,10 @@ def test_drop_duplicates_only_in_dedup_exact():
     stray = [c for c in calls if c[:2] not in DEDUP_ALLOWED]
     assert stray == [], f"deduplicate batch frames with operators.dedup.dedup_exact: {stray}"
     assert {c[:2] for c in calls} == DEDUP_ALLOWED
+
+
+def test_scratch_paths_only_in_scratch_dir():
+    calls = [c for m in ("gettempdir", "mkdtemp", "getpid") for c in _method_calls(m)]
+    stray = [c for c in calls if c[:2] not in SCRATCH_ALLOWED]
+    assert stray == [], f"place scratch files with session.scratch_dir: {stray}"
+    assert {c[:2] for c in calls} == {("session.py", "_scratch_root")}

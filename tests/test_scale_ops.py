@@ -58,14 +58,12 @@ def test_point_interval_join_matches_theta(spark, sf_dir):
     assert sorted(map(tuple, theta)) == sorted(map(tuple, bucketed))
 
 
-def test_partitioned_read_prunes_partitions(spark, sf_dir):
+def test_partitioned_read_prunes_partitions(spark, sf_dir, tmp_path):
     """Partition pruning is the layout-level filter: a year-equality
     predicate over a year-partitioned sink must appear as a
     PartitionFilter on the scan (skipping other years' files before any
     I/O), not as a post-scan row filter."""
     import io
-    import os
-    import tempfile
     from contextlib import redirect_stdout
 
     from pyspark.sql import functions as F
@@ -73,7 +71,7 @@ def test_partitioned_read_prunes_partitions(spark, sf_dir):
     from data_engineering_capstone_spark.sources.testdata import load_table
     from data_engineering_capstone_spark.sources.writers import write_parquet
 
-    out = os.path.join(tempfile.gettempdir(), "dec_spark_prune_test")
+    out = str(tmp_path / "orders_by_year")
     o = load_table(spark, sf_dir, "orders").withColumn(
         "order_year", F.year("o_orderdate")
     )
@@ -92,20 +90,18 @@ def test_partitioned_read_prunes_partitions(spark, sf_dir):
     assert df.count() == n_expected > 0
 
 
-def test_compact_parquet_merges_small_files(spark, sf_dir):
+def test_compact_parquet_merges_small_files(spark, sf_dir, tmp_path):
     """Fragment orders into many tiny files, compact, and verify: far
     fewer files, identical data."""
     import glob
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from data_engineering_capstone_spark.sources.testdata import load_table
     from data_engineering_capstone_spark.sources.writers import compact_parquet, write_parquet
 
-    base = os.path.join(tempfile.gettempdir(), "dec_spark_compact_test")
-    frag, compacted = os.path.join(base, "frag"), os.path.join(base, "out")
+    frag, compacted = str(tmp_path / "frag"), str(tmp_path / "out")
     o = load_table(spark, sf_dir, "orders")
     write_parquet(o.repartition(64), frag, max_records_per_file=200)
     n_frag = len(glob.glob(os.path.join(frag, "*.parquet")))
@@ -120,25 +116,21 @@ def test_compact_parquet_merges_small_files(spark, sf_dir):
     assert a == b
 
 
-def test_merge_schema_reads_evolved_partitions(spark, sf_dir):
+def test_merge_schema_reads_evolved_partitions(spark, sf_dir, tmp_path):
     """Schema evolution: an appended partition gains a column; a
     mergeSchema read sees the union schema with NULLs for old rows —
     the append-only table evolution pattern at scale."""
-    import os
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from data_engineering_capstone_spark.sources.testdata import load_table
 
-    base = os.path.join(tempfile.gettempdir(), "dec_spark_evolve_test")
     o = load_table(spark, sf_dir, "orders").limit(100)
-    o.write.mode("overwrite").parquet(os.path.join(base, "batch=1"))
+    o.write.mode("overwrite").parquet(str(tmp_path / "batch=1"))
     o.withColumn("discount_pct", F.lit(5.0)).write.mode("overwrite").parquet(
-        os.path.join(base, "batch=2")
+        str(tmp_path / "batch=2")
     )
 
-    merged = spark.read.option("mergeSchema", "true").parquet(base)
+    merged = spark.read.option("mergeSchema", "true").parquet(str(tmp_path))
     assert "discount_pct" in merged.columns
     per_batch = {
         r["batch"]: r["n_null"]

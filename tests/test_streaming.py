@@ -4,10 +4,13 @@
 from __future__ import annotations
 
 import os
+import re
 import subprocess
 import sys
 import tempfile
+from types import SimpleNamespace
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_engineering_capstone_spark.sources.testdata import load_table
@@ -119,7 +122,6 @@ def test_kafka_plumbing_raises_clear_error_without_connector(spark):
     """No Kafka jar in this container: the wiring must fail fast with an
     actionable message at plan-construction time, not a stack bomb at
     stream start."""
-    import pytest
     from pyspark.sql import types as T
 
     from data_engineering_capstone_spark.sources.kafka import read_kafka_stream
@@ -613,15 +615,57 @@ def test_streaming_count_min_survives_checkpoint_restart(spark, tmp_path):
     assert got == want and len(got) > 0
 
 
+def _stub_session(master: str):
+    """Just enough of a SparkSession for ``scratch_dir``'s master check."""
+    return SimpleNamespace(sparkContext=SimpleNamespace(master=master))
+
+
+@pytest.mark.parametrize(
+    "master, accepted",
+    [("local", True), ("local[2]", True), ("local-cluster[2,1,1024]", True),
+     ("yarn", False), ("spark://h:7077", False)],
+)
+def test_scratch_dir_admits_only_local_masters(tmp_path, monkeypatch, master, accepted):
+    """Scratch lives in the driver's tempdir, which only local masters'
+    executors share; any other master must fail loudly, naming itself."""
+    from data_engineering_capstone_spark import session
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(session, "_SCRATCH_PID", None)
+    if accepted:
+        assert os.path.isdir(session.scratch_dir(_stub_session(master), "x"))
+    else:
+        with pytest.raises(RuntimeError, match=re.escape(master)):
+            session.scratch_dir(_stub_session(master), "x")
+
+
+def test_scratch_dir_empties_own_root_once(tmp_path, monkeypatch):
+    """A root under this process's pid is a crashed process's leftover
+    (recycled pid): the first call empties it, later calls keep what this
+    process placed."""
+    from data_engineering_capstone_spark import session
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(session, "_SCRATCH_PID", None)
+    stale = tmp_path / "dec_spark" / str(os.getpid()) / "fmt"
+    stale.mkdir(parents=True)
+    (stale / "old.parquet").write_text("stale")
+    spark = _stub_session("local[2]")
+    path = session.scratch_dir(spark, "fmt")
+    assert path == str(stale) and os.listdir(path) == []
+    (stale / "new.parquet").write_text("ours")
+    assert os.listdir(session.scratch_dir(spark, "fmt")) == ["new.parquet"]
+
+
 def test_snapshot_root_sweep_keeps_live_sibling_roots(tmp_path, monkeypatch):
     """The stale-root sweep removes a dead PID's root and keeps live
     ones, including a process the signal probe may not signal (another
     user's), without consulting Linux-only /proc."""
-    from data_engineering_capstone_spark.streaming import windows
+    from data_engineering_capstone_spark import session
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    monkeypatch.setattr(windows, "_ROOT_PID", None, raising=False)
-    base = tmp_path / "dec_spark_stream_snap"
+    monkeypatch.setattr(session, "_SCRATCH_PID", None)
+    base = tmp_path / "dec_spark"
     dead = subprocess.Popen([sys.executable, "-c", ""])
     dead.wait()
     live = subprocess.Popen([sys.executable, "-c", "import time; time.sleep(60)"])
@@ -637,9 +681,9 @@ def test_snapshot_root_sweep_keeps_live_sibling_roots(tmp_path, monkeypatch):
     for pid in (dead.pid, live.pid, foreign):
         (base / str(pid)).mkdir(parents=True)
     try:
-        root = windows._snapshot_root()
+        path = session.scratch_dir(_stub_session("local[2]"), "stream_snap")
     finally:
         live.kill()
         live.wait()
-    assert root == str(base / str(os.getpid()))
+    assert path == str(base / str(os.getpid()) / "stream_snap")
     assert set(os.listdir(base)) == {str(os.getpid()), str(live.pid), str(foreign)}
