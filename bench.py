@@ -134,6 +134,8 @@ def bench_query(name: str, sf_dir: str) -> dict:
         "load1": round(load1, 2),
         "load1_max": round(max(load1, load1_end), 2),
         "gate_waits": waits,
+        "cpus": spark.sparkContext.defaultParallelism,
+        "master": spark.sparkContext.master,
     }
 
 
@@ -150,12 +152,16 @@ def main() -> int:
     names = [n for n in HEADLINE if n in load_all()]
     timings: dict[str, float] = {}
     loads: dict[str, float] = {}
+    # the parallelism the timed sessions ran with, as their SparkContext reports it
+    ran_with: dict[str, set] = {"cpus": set(), "master": set()}
 
     if os.environ.get("SPARK_GRAFT_BENCH_INPROC"):
         from data_engineering_capstone_spark.catalog import load_all as _la
         from data_engineering_capstone_spark.session import get_spark
 
         spark = get_spark("bench")
+        ran_with["cpus"].add(spark.sparkContext.defaultParallelism)
+        ran_with["master"].add(spark.sparkContext.master)
         catalog = _la()
         run_one(catalog[names[0]].fn, spark, sf_dir)
         for name in names:
@@ -226,6 +232,9 @@ def main() -> int:
                     return 1
                 results.append(extra)
                 vals = sorted(r["best"] for r in results)
+            for r in results:
+                ran_with["cpus"].add(r["cpus"])
+                ran_with["master"].add(r["master"])
             timings[name] = vals[0]
             spreads[name] = round((vals[1] - vals[0]) / vals[0], 3) if vals[0] else 0.0
             loads[name] = max(r["load1"] for r in results)
@@ -242,6 +251,8 @@ def main() -> int:
         "max_load1": max(loads.values()) if loads else None,
         "isolation": "inproc" if os.environ.get("SPARK_GRAFT_BENCH_INPROC") else "subprocess",
     }
+    for k, seen in ran_with.items():
+        out[k] = seen.pop() if len(seen) == 1 else sorted(seen, key=str)
     if not os.environ.get("SPARK_GRAFT_BENCH_INPROC"):
         out["spread"] = spreads
         out["max_spread"] = max(spreads.values()) if spreads else None

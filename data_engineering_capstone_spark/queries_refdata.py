@@ -45,6 +45,17 @@ _DEMOGRAPHICS = os.path.join(REF_DIR, "us-cities-demographics.csv")
 _SAS_DATA = os.path.join(REF_DIR, "sas_data")
 _SAMPLE_CSV = os.path.join(REF_DIR, "immigration_data_sample.csv")
 
+
+def _require(*paths: str) -> None:
+    """Fail before any Spark work when a reference file is absent."""
+    for path in paths:
+        if not os.path.exists(path):
+            raise FileNotFoundError(
+                f"reference input {path} is missing; point SPARK_GRAFT_REF_DIR at a "
+                f"checkout of the reference (now {REF_DIR})"
+            )
+
+
 # friendly dim name per proc-format map name (SURVEY.md §1.1)
 _DIM_NAMES = {
     "i94cntyl": "country",
@@ -133,6 +144,7 @@ def ref_sas_labels_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference: I94_SAS_Labels_Descriptions.SAS:9-1050)"""
     from .etl.sas_labels import parse_comment_value_map, parse_sas_value_maps
 
+    _require(_LABELS)
     prep(spark)
     with open(_LABELS, encoding="latin-1") as f:
         text = f.read()
@@ -209,6 +221,7 @@ def ref_demographics_race_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.pivot import pivot_wide
     from .sources.readers import read_semicolon_csv
 
+    _require(_DEMOGRAPHICS)
     prep(spark)
     df = read_semicolon_csv(spark, _DEMOGRAPHICS, schema=_DEMO_SCHEMA, header="true")
     df = df.select(
@@ -276,6 +289,7 @@ def ref_i94_star_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL. (reference: sas_data/part-*.parquet, notebook cells 5-13)"""
     from .etl import pipeline
 
+    _require(_SAS_DATA, _LABELS)
     prep(spark)
     # project the star's columns BEFORE the clean/dedup stage: Catalyst
     # cannot prune columns through dropDuplicates (which row survives is
@@ -320,6 +334,7 @@ def ref_immigration_sample_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (visatype, gender). (reference: immigration_data_sample.csv:1)"""
     from .sources.readers import read_csv
 
+    _require(_SAMPLE_CSV)
     prep(spark)
     fields = [T.StructField("_idx", T.LongType())]
     doubles = {
