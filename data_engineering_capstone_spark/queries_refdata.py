@@ -252,6 +252,10 @@ def ref_demographics_race_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact AS (
       SELECT * FROM read_parquet('{_SAS_DATA}/*.parquet')
       WHERE cicid IS NOT NULL AND i94yr IS NOT NULL AND i94mon IS NOT NULL
+      -- the key dedup of pipeline.clean (dedup_exact on cicid). One row
+      -- per cicid; where duplicates are not full-row copies, both sides
+      -- keep an arbitrary row and may disagree.
+      QUALIFY row_number() OVER (PARTITION BY cicid) = 1
     ),
     staged AS (
       SELECT c.label AS origin_country,
