@@ -63,51 +63,12 @@ def _driver_certified() -> set[str]:
     return done
 
 
-# Entries REWRITTEN after their last driver certification (round-9
-# verdict task 5): their green rows in CORRECTNESS_r*.json predate the
-# current implementation, so they must re-enter the sample window ahead
-# of stably-certified entries.  Maintained by hand per round; remove a
-# name once a post-rewrite CORRECTNESS file certifies it.
-# Round during which the names below were last rewritten.  A CORRECTNESS
-# file from round >= _REWRITE_ROUND that certifies a listed name makes the
-# list stale (tests/test_contract.py::test_rewritten_list_not_stale fails)
-# — the name must then be pruned.
-_REWRITE_ROUND = 12
-
-_REWRITTEN_SINCE_CERT: tuple[str, ...] = (
-    # (CORRECTNESS_r11.json certified 50 r11 rewrites and
-    # CORRECTNESS_r12.json another 50 — the r11 build rewrites, the r12
-    # streaming snapshot rework, the ts_* and llm_* final-sort sweep and
-    # the fan-out gate callers — all pruned per this list's contract.)
-    #
-    # round-11 build rewrite, not yet driver-certified:
-    "sql_lateral_topk",       # in-lateral custkey bound
-    # round-11 final-sort sweep (display-only orderBy removed from
-    # fact-grain outputs), not yet driver-certified:
-    "udf_pandas_scalar", "udf_apply_in_pandas", "udf_apply_in_arrow",
-    "udf_map_in_arrow", "mm_metadata_extract", "mm_feature_extract",
-    "mm_audio_energy", "mm_frame_sample", "mm_binary_ingest",
-    "mm_resize_pipeline", "mm_wav_energy", "mm_bmp_stats",
-    "mm_phash_near_dup", "mm_audio_fingerprint_dedup",
-    "ts_rolling_median",
-    # round-11 gated scan fan-out (guide §2.5; pqmeta.fanout_starved_scan),
-    # not yet driver-certified:
-    "llm_mojibake_detect",
-)
-
-
 def _ordered() -> list[str]:
-    """Catalog names in three tiers: never-driver-certified first, then
-    rewritten-since-last-certification, then stably-certified entries
-    (registration order preserved within each tier)."""
+    """Catalog names in two tiers: never-driver-certified first, then
+    certified entries (registration order preserved within each tier)."""
     catalog = load_all()
     certified = _driver_certified()
-    fresh = [n for n in catalog if n not in certified]
-    recert = [n for n in catalog
-              if n in certified and n in _REWRITTEN_SINCE_CERT]
-    seen = [n for n in catalog
-            if n in certified and n not in _REWRITTEN_SINCE_CERT]
-    return fresh + recert + seen
+    return sorted(catalog, key=lambda n: n in certified)  # stable: False first
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -60,9 +60,6 @@ were all load-wave samples the gate-at-start could not see):
   guarantees the min itself came from a clean window whenever one was
   obtainable within the cap). ``window_load`` per query in the artifact
   is the winning child's load1_max.
-
-Set ``SPARK_GRAFT_BENCH_INPROC=1`` for the fast shared-session mode
-(iteration convenience; not for recorded artifacts).
 """
 
 from __future__ import annotations
@@ -155,90 +152,75 @@ def main() -> int:
     # the parallelism the timed sessions ran with, as their SparkContext reports it
     ran_with: dict[str, set] = {"cpus": set(), "master": set()}
 
-    if os.environ.get("SPARK_GRAFT_BENCH_INPROC"):
-        from data_engineering_capstone_spark.catalog import load_all as _la
-        from data_engineering_capstone_spark.session import get_spark
+    def run_child(name: str) -> dict | None:
+        proc = subprocess.run(
+            [sys.executable, os.path.abspath(__file__), "--child", name],
+            capture_output=True,
+            text=True,
+            env={**os.environ, "SPARK_GRAFT_SF_DIR": sf_dir},
+        )
+        line = next(
+            (l for l in proc.stdout.splitlines() if l.startswith("CHILD_RESULT ")),
+            None,
+        )
+        if proc.returncode != 0 or line is None:
+            print(
+                f"bench child failed for {name}:\n{proc.stdout[-2000:]}\n"
+                f"{proc.stderr[-2000:]}",
+                file=sys.stderr,
+            )
+            return None
+        return json.loads(line[len("CHILD_RESULT "):])
 
-        spark = get_spark("bench")
-        ran_with["cpus"].add(spark.sparkContext.defaultParallelism)
-        ran_with["master"].add(spark.sparkContext.master)
-        catalog = _la()
-        run_one(catalog[names[0]].fn, spark, sf_dir)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4)
+    # verdict r11 item 1: ~0.5×cpus — floored at the pre-timing
+    # LOAD_GATE so a small-core box under ambient load the child gate
+    # already tolerates can't make the re-check loop unsatisfiable
+    # (it would burn the 5-child cap on every query and still record
+    # a dirty window)
+    window_gate = max(0.5 * cpus, LOAD_GATE)
+    spreads: dict[str, float] = {}
+    window_loads: dict[str, float] = {}
+    by_name: dict[str, list[dict]] = {n: [] for n in names}
+    for _pass in range(2):  # interleave: decorrelate a query's two windows
         for name in names:
-            loads[name] = round(os.getloadavg()[0], 2)
-            timings[name] = round(
-                min(run_one(catalog[name].fn, spark, sf_dir) for _ in range(REPS)), 3
-            )
-    else:
-        def run_child(name: str) -> dict | None:
-            proc = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--child", name],
-                capture_output=True,
-                text=True,
-                env={**os.environ, "SPARK_GRAFT_SF_DIR": sf_dir},
-            )
-            line = next(
-                (l for l in proc.stdout.splitlines() if l.startswith("CHILD_RESULT ")),
-                None,
-            )
-            if proc.returncode != 0 or line is None:
-                print(
-                    f"bench child failed for {name}:\n{proc.stdout[-2000:]}\n"
-                    f"{proc.stderr[-2000:]}",
-                    file=sys.stderr,
-                )
-                return None
-            return json.loads(line[len("CHILD_RESULT "):])
+            r = run_child(name)
+            if r is None:
+                return 1
+            by_name[name].append(r)
+    for name in names:
+        results = by_name[name]
 
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4)
-        # verdict r11 item 1: ~0.5×cpus — floored at the pre-timing
-        # LOAD_GATE so a small-core box under ambient load the child gate
-        # already tolerates can't make the re-check loop unsatisfiable
-        # (it would burn the 5-child cap on every query and still record
-        # a dirty window)
-        window_gate = max(0.5 * cpus, LOAD_GATE)
-        spreads: dict[str, float] = {}
-        window_loads: dict[str, float] = {}
-        by_name: dict[str, list[dict]] = {n: [] for n in names}
-        for _pass in range(2):  # interleave: decorrelate a query's two windows
-            for name in names:
-                r = run_child(name)
-                if r is None:
-                    return 1
-                by_name[name].append(r)
-        for name in names:
-            results = by_name[name]
+        def winner() -> dict:
+            return min(results, key=lambda r: r["best"])
 
-            def winner() -> dict:
-                return min(results, key=lambda r: r["best"])
-
+        vals = sorted(r["best"] for r in results)
+        # Cross-JVM variance dominates (measured: idle-box children of
+        # one sub-second query span 24% — codegen/JIT luck, not load).
+        # Add children until the two best agree within SPREAD_GATE AND
+        # the winning child's timing window was load-clean: a wave
+        # arriving mid-window (invisible to the start-of-child gate)
+        # now triggers a fresh subprocess instead of a dirty artifact.
+        while (
+            vals[0] > 0
+            and (
+                (vals[1] - vals[0]) / vals[0] > SPREAD_GATE
+                or winner().get("load1_max", 0.0) > window_gate
+            )
+            and len(results) < 5
+        ):
+            extra = run_child(name)
+            if extra is None:
+                return 1
+            results.append(extra)
             vals = sorted(r["best"] for r in results)
-            # Cross-JVM variance dominates (measured: idle-box children of
-            # one sub-second query span 24% — codegen/JIT luck, not load).
-            # Add children until the two best agree within SPREAD_GATE AND
-            # the winning child's timing window was load-clean: a wave
-            # arriving mid-window (invisible to the start-of-child gate)
-            # now triggers a fresh subprocess instead of a dirty artifact.
-            while (
-                vals[0] > 0
-                and (
-                    (vals[1] - vals[0]) / vals[0] > SPREAD_GATE
-                    or winner().get("load1_max", 0.0) > window_gate
-                )
-                and len(results) < 5
-            ):
-                extra = run_child(name)
-                if extra is None:
-                    return 1
-                results.append(extra)
-                vals = sorted(r["best"] for r in results)
-            for r in results:
-                ran_with["cpus"].add(r["cpus"])
-                ran_with["master"].add(r["master"])
-            timings[name] = vals[0]
-            spreads[name] = round((vals[1] - vals[0]) / vals[0], 3) if vals[0] else 0.0
-            loads[name] = max(r["load1"] for r in results)
-            window_loads[name] = winner().get("load1_max", winner()["load1"])
+        for r in results:
+            ran_with["cpus"].add(r["cpus"])
+            ran_with["master"].add(r["master"])
+        timings[name] = vals[0]
+        spreads[name] = round((vals[1] - vals[0]) / vals[0], 3) if vals[0] else 0.0
+        loads[name] = max(r["load1"] for r in results)
+        window_loads[name] = winner().get("load1_max", winner()["load1"])
 
     total = round(sum(timings.values()), 3)
     out = {
@@ -249,15 +231,14 @@ def main() -> int:
         "sf": sf,
         "loadavg": loads,
         "max_load1": max(loads.values()) if loads else None,
-        "isolation": "inproc" if os.environ.get("SPARK_GRAFT_BENCH_INPROC") else "subprocess",
+        "isolation": "subprocess",
     }
     for k, seen in ran_with.items():
         out[k] = seen.pop() if len(seen) == 1 else sorted(seen, key=str)
-    if not os.environ.get("SPARK_GRAFT_BENCH_INPROC"):
-        out["spread"] = spreads
-        out["max_spread"] = max(spreads.values()) if spreads else None
-        out["window_load"] = window_loads
-        out["window_gate"] = window_gate
+    out["spread"] = spreads
+    out["max_spread"] = max(spreads.values()) if spreads else None
+    out["window_load"] = window_loads
+    out["window_gate"] = window_gate
     print(json.dumps(out))
     return 0
 

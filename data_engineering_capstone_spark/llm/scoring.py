@@ -24,7 +24,7 @@ the zero-shuffle lambda plan wins by 2.5-2.9x. Kept deliberately; the
 repo's CodegenFallback rule (BASELINE.md) applies where the lambda IS
 the hot loop (vector math), not here.
 
-Round-10 kernel fix (tools/r10_races2.py): the weight lambda
+Round-10 kernel fix (BASELINE.md, round-10 kernel race): the weight lambda
 referenced ``F.md5(tok)`` FOUR times, and interpreted higher-order
 lambdas do not common-subexpression-eliminate — md5 ran 4× per token.
 Chaining two transforms (tokens → md5 array → weight array) binds the

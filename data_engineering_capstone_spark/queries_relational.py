@@ -426,7 +426,7 @@ def cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     Phase 1 also runs on the q1/q14 integer-cents device (int64 partials
     at the (status, priority, partition) grain, DECIMAL merge, one
     double conversion at the boundary) instead of a decimal sum on the
-    scan path. Races of record (tools/r9_races.py, v6 replica, results
+    scan path. Races of record (BASELINE.md round 9, v6 replica, results
     bit-identical): old Expand form 1.152 s at 64× / 3.563 s at 256×;
     two-phase decimal 0.776 / 1.274 s; two-phase cents 0.781 s at 256×
     (4.6× total, ratio 15.8× → 3.41× vs the 0.229 s DuckDB oracle —
@@ -1060,7 +1060,7 @@ def set_ops_multiset(spark: SparkSession, sf_dir: str) -> DataFrame:
     replication. The replaced plan (DataFrame intersectAll/exceptAll,
     which Spark executes as count-per-side + generate-replicate) paid
     the replicate twice and measured 12.0 s / 3.09× at 256×; race of
-    record (tools/r8_races.py, 64× replica, same session, results
+    record (BASELINE.md round 8, 64× replica, same session, results
     bit-identical): old 4.17 s vs new 0.60 s — 6.9×. Clean-box
     crossover at 64×: 0.593 s = 0.34× vs DuckDB (Spark faster). The
     operator itself stays covered — tests/test_operators.py pins
@@ -1161,7 +1161,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     but the plan drops from three post-aggregate exchanges (re-agg to
     pk, plus both join inputs hashed to pk) to one: the (pk,sk) rows
     re-exchange to pk once and the min + filter happen in place.
-    Races of record (tools/r8_races.py, same session, results
+    Races of record (BASELINE.md round 8, same session, results
     bit-identical each time): join-back 6.13 s vs window 4.86 s at
     64× (1.26×); at 256× join-back 11.36 s vs decimal-window 9.58 s vs
     THIS form — min over integer cents on the codegen long path (the

@@ -402,23 +402,14 @@ def stream_custom_source_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # state) exercised IDENTICALLY at every scale while holding the
     # per-batch floor constant: 14.2 s -> ~4 s at sf0.1. The floor
     # itself is micro-batch machinery, not the source (SCALE.md).
-    import pyarrow.parquet as pq
+    from .sources.pqmeta import parquet_row_count
 
     epath = f"{sf_dir}/events.parquet"
-    if os.path.isdir(epath):
-        # replica-scale tables are directories of part files — sum the
-        # footers (metadata-only, no data read)
-        nrows = sum(
-            pq.ParquetFile(os.path.join(epath, n)).metadata.num_rows
-            for n in sorted(os.listdir(epath))
-            if n.endswith(".parquet") and not n.startswith(("_", "."))
-        )
-    else:
-        nrows = pq.ParquetFile(epath).metadata.num_rows
+    nrows = parquet_row_count(epath)  # file or replica directory, footers only
     chunk = max(2000, -(-nrows // 6))
     raw = (
         spark.readStream.format("events_replay")
-        .option("path", f"{sf_dir}/events.parquet")
+        .option("path", epath)
         .option("rowsPerBatch", str(chunk))
         .load()
     )

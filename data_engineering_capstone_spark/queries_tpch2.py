@@ -77,7 +77,7 @@ def q4_priority_late_ship(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``l_shipdate > min(o_orderdate) + 60 = 1996-03-01`` (the orders
     window is a literal), so supplying that filter by hand
     zone-map-prunes the early shipyears at the parquet scan BEFORE the
-    semi-join shuffle. 256× race of record (tools/r10_races.py):
+    semi-join shuffle. 256× race of record (BASELINE.md, round 10):
     plain semi 11.53 s → semi+pushdown 5.47 s (2.1×). The
     anti_semi-style collapse (EXISTS ⟺ per-order MAX(l_shipdate) >
     odate+60, partial-agg map-side) was also raced and LOST to this

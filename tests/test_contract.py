@@ -115,39 +115,3 @@ def test_no_decimal_class_at_any_oracle_output_boundary(sf_dir):
         "oracle output columns that will cross Arrow as Decimal and "
         f"hash-fail at the driver: {offenders}"
     )
-
-
-def test_rewritten_list_not_stale():
-    """_REWRITTEN_SINCE_CERT must be pruned once a post-rewrite CORRECTNESS
-    file certifies a listed name (round-10 verdict nit: the r9/r10 list
-    stayed after CORRECTNESS_r10 re-certified all 17 names, wasting sample
-    slots).  A name is stale when a driver CORRECTNESS file from round >=
-    _REWRITE_ROUND shows it green."""
-    import glob
-    import json
-    import os
-    import re
-
-    here = os.path.dirname(os.path.abspath(entry_mod.__file__))
-    stale = []
-    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m or int(m.group(1)) < entry_mod._REWRITE_ROUND:
-            continue
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name in entry_mod._REWRITTEN_SINCE_CERT:
-            rec = data.get(name)
-            if not isinstance(rec, dict):
-                continue
-            full_green = (rec.get("rows_match") and rec.get("schema_match")
-                          and rec.get("hash_match"))
-            rows_only_green = (rec.get("err") == "no_oracle"
-                               and rec.get("spark_rows") is not None)
-            if full_green or rows_only_green:
-                stale.append((name, os.path.basename(path)))
-    assert not stale, (
-        f"prune these from _REWRITTEN_SINCE_CERT (re-certified post-rewrite): {stale}")
