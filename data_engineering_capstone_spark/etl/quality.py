@@ -39,11 +39,6 @@ def check_nonempty(df: DataFrame, name: str = "nonempty") -> CheckResult:
     return CheckResult(name, n > 0, f"{n}+ rows", "> 0 rows")
 
 
-def check_completeness(source_count: int, sink_count: int, name: str = "completeness") -> CheckResult:
-    """B11: source/count check — no rows lost between source and sink."""
-    return CheckResult(name, source_count == sink_count, str(sink_count), str(source_count))
-
-
 def check_unique_key(df: DataFrame, keys: Sequence[str], name: str | None = None) -> CheckResult:
     """B12: key uniqueness via one distributed agg (no full dedup pass)."""
     name = name or f"unique({','.join(keys)})"

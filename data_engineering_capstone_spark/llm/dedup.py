@@ -101,21 +101,6 @@ def exact_dedup(
     return fp.join(winners, [id_col, "__fp"], "left_semi").drop("__fp")
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature as a Column expression: sig[i] = min_s h_i(s).
-
-    NOTE: nested higher-order functions run interpreted (CodegenFallback)
-    — fine for ad-hoc use on short arrays, but the hot path is
-    :func:`minhash_signatures` below (explode + 64-way min aggregate,
-    whole-stage codegen, map-side partial mins). Measured 18× faster on
-    the synthetic documents table.
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, i))),
-    )
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str,

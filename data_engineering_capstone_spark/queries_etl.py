@@ -19,15 +19,10 @@ from .functions.dates import date_parts, date_to_sas_day, parse_char_date, sas_d
 from .operators.dedup import dedup_exact
 from .operators.pivot import pivot_wide
 from .operators.relational import code_to_name
-from .session import prep, scratch_dir
+from .session import scratch_dir
 from .sources.readers import local_frame
-from .sources.testdata import load_table
+from .sources.testdata import load_table as _t
 from .sources.writers import write_parquet, write_zordered
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    prep(spark)
-    return load_table(spark, sf_dir, name)
 
 
 @query(

@@ -13,13 +13,7 @@ from pyspark.sql import functions as F
 from .catalog import query
 from .functions.money import to_cents
 from .operators.asof import asof_join
-from .session import prep
-from .sources.testdata import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    prep(spark)
-    return load_table(spark, sf_dir, name)
+from .sources.testdata import load_table as _t
 
 
 @query(
@@ -719,7 +713,6 @@ def agg_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolating `agg_exact_percentiles`. SQL form exercises the
     ordered-set aggregate parser path.
     """
-    prep(spark)
     _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_pd")
     return spark.sql(
         """

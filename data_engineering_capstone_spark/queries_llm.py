@@ -33,14 +33,9 @@ from .llm.text import (
     stopword_ratio,
 )
 from .functions.strings import ngrams, token_count
-from .session import prep, scratch_dir
+from .session import scratch_dir
 from .sources.readers import local_frame
-from .sources.testdata import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    prep(spark)
-    return load_table(spark, sf_dir, name)
+from .sources.testdata import load_table as _t
 
 
 @query(

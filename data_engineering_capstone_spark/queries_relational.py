@@ -16,14 +16,8 @@ from .plans.strategies import gated_broadcast
 from .functions.money import sum_cents_exact, to_cents
 from .operators.relational import anti_join, broadcast_dim_join
 from .operators.topk import top_k, top_k_per_group
-from .session import prep
 from .sources.readers import local_frame
-from .sources.testdata import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    prep(spark)
-    return load_table(spark, sf_dir, name)
+from .sources.testdata import load_table as _t
 
 
 def _revenue_dec():

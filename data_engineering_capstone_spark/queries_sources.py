@@ -19,12 +19,7 @@ from pyspark.sql import types as T
 from .catalog import query
 from .session import prep, scratch_dir
 from .sources.readers import read_csv, read_json, read_orc, read_semicolon_csv
-from .sources.testdata import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    prep(spark)
-    return load_table(spark, sf_dir, name)
+from .sources.testdata import load_table as _t
 
 
 _NATION_AGG = """
@@ -265,7 +260,7 @@ def bucketed_join_zero_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         # stale location from a previous session before re-registering
         for leaf in ("lineitem_b", "orders_b"):
             shutil.rmtree(os.path.join(loc, leaf), ignore_errors=True)
-        li = load_table(spark, sf_dir, "lineitem")
+        li = _t(spark, sf_dir, "lineitem")
         # bucket count SCALES with the fact (round-9 fix: a fixed 16
         # buckets means each bucketed-write task sorts corpus/16 rows —
         # 9.6M wide rows/task at the 256× replica OOM'd the sorter pool,
@@ -288,7 +283,7 @@ def bucketed_join_zero_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_buckets = max(16, n_rows // 4_000_000 + 1)
         write_bucketed_table(li, l_tbl,
                              ["l_orderkey"], n_buckets, sort_cols=["l_orderkey"])
-        write_bucketed_table(load_table(spark, sf_dir, "orders"), o_tbl,
+        write_bucketed_table(_t(spark, sf_dir, "orders"), o_tbl,
                              ["o_orderkey"], n_buckets, sort_cols=["o_orderkey"])
     l = spark.table(l_tbl)
     o = spark.table(o_tbl).filter(F.col("o_orderstatus") == "F")

@@ -13,12 +13,10 @@ from pyspark.sql import functions as F
 
 from .catalog import query
 from .operators.timeseries import dense_grid, forward_fill, sessionize, time_bucket
-from .session import prep
 from .sources.testdata import load_table
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prep(spark)
     return load_table(spark, sf_dir, "events")
 
 

@@ -25,14 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import query
-from .session import prep
 from .plans.strategies import gated_broadcast
-from .sources.testdata import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    prep(spark)
-    return load_table(spark, sf_dir, name)
+from .sources.testdata import load_table as _t
 
 
 def _dec(col: str) -> F.Column:

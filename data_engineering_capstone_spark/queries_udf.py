@@ -25,12 +25,7 @@ from .llm.multimodal import (
     synthesize_payload,
 )
 from .session import prep
-from .sources.testdata import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    prep(spark)
-    return load_table(spark, sf_dir, name)
+from .sources.testdata import load_table as _t
 
 
 # NB: pandas_udf with a DDL-string return type parses it through the
@@ -420,8 +415,7 @@ def mm_resize_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .llm.multimodal import resize_images, synthesize_payload
 
-    prep(spark)
-    d = load_table(spark, sf_dir, "documents").select(
+    d = _t(spark, sf_dir, "documents").select(
         "doc_id",
         F.when(F.col("doc_id") % 3 == 0, "image")
         .when(F.col("doc_id") % 3 == 1, "audio")
@@ -465,8 +459,7 @@ def udf_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import pyarrow as pa
 
-    prep(spark)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
     def norms(batches):
         import numpy as np
@@ -884,8 +877,7 @@ def udf_apply_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    prep(spark)
-    o = load_table(spark, sf_dir, "orders").select(
+    o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority",
         F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint").alias("c"),
     )

@@ -1,8 +1,8 @@
-"""Kafka source/sink wiring (SURVEY.md §2 C-stream scale path).
+"""Kafka source wiring (SURVEY.md §2 C-stream scale path).
 
 The container ships no Kafka broker and no spark-sql-kafka connector
-jar, so these functions build the full production plan shape — options,
-JSON value decoding, key/value encoding — and surface a clear error at
+jar, so ``read_kafka_stream`` builds the full production plan shape
+(options, JSON value decoding) and surfaces a clear error at
 plan-construction time if the connector is absent. On a real cluster
 (``--packages org.apache.spark:spark-sql-kafka-0-10_2.13:<ver>``) the
 identical code runs unchanged; downstream transformations are the same
@@ -62,37 +62,3 @@ def read_kafka_stream(
         F.col("timestamp").alias("kafka_ts"),
     ).select("kafka_key", "v.*", "topic", "partition", "offset", "kafka_ts")
 
-
-def write_kafka_stream(
-    df: DataFrame,
-    bootstrap_servers: str,
-    topic: str,
-    checkpoint_dir: str,
-    key_col: str | None = None,
-):
-    """Streaming DataFrame → Kafka topic (JSON-encoded values).
-
-    The key column drives Kafka partition routing — key by the entity id
-    so per-entity ordering survives the bus. Checkpointing gives
-    at-least-once delivery; pair with an idempotent consumer for
-    effective exactly-once.
-    """
-    key = (
-        F.col(key_col).cast("string")
-        if key_col is not None
-        else F.lit(None).cast("string")
-    )
-    payload = df.select(
-        key.alias("key"),
-        F.to_json(F.struct(*[F.col(c) for c in df.columns])).alias("value"),
-    )
-    try:
-        return (
-            payload.writeStream.format("kafka")
-            .option("kafka.bootstrap.servers", bootstrap_servers)
-            .option("topic", topic)
-            .option("checkpointLocation", checkpoint_dir)
-            .start()
-        )
-    except Exception as exc:  # noqa: BLE001
-        raise RuntimeError(_INSTALL_HINT) from exc

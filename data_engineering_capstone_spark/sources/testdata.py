@@ -8,6 +8,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import prep
+from .pqmeta import spark_schema
+
 TABLES = (
     "region",
     "nation",
@@ -25,18 +28,24 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one synthetic table.
+    """Read one synthetic table, on a session ``session.prep`` has pinned.
+
+    The schema comes from the file's cached footer
+    (``pqmeta.spark_schema``), so a warm read launches no Spark
+    inference job; where the footer cannot say, Spark infers.
 
     ``events.ts`` has shipped as either TIMESTAMP(NANOS) parquet (which
     Spark's vectorized reader rejects — read as int64 via ``nanosAsLong``
     and convert column-side) or native timestamp[us] (read directly).
     Branch on the decoded dtype so both generations of testdata work.
     """
+    prep(spark)
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        return _normalize_event_ts(df)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    schema = spark_schema(path, nanos_as_long=name == "events")
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+    return _normalize_event_ts(df) if name == "events" else df
 
 
 def _normalize_event_ts(df: DataFrame) -> DataFrame:

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import scratch_dir
+from ..sources.pqmeta import spark_schema
 
 _MEM_COUNTER = itertools.count()
 
@@ -29,9 +30,9 @@ _MEM_COUNTER = itertools.count()
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events as a file-source stream with event-time ``ts``.
 
-    Schema comes from a batch read (streaming sources require an explicit
-    schema); the TIMESTAMP(NANOS) workaround matches
-    ``sources.testdata.load_table``.
+    Schema comes from the file's cached footer (streaming sources
+    require an explicit schema), else from a batch read; the
+    TIMESTAMP(NANOS) workaround matches ``sources.testdata.load_table``.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/events.parquet"
@@ -56,7 +57,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             except OSError:
                 shutil.copyfile(path, link)
         src = stage
-    schema = spark.read.parquet(path).schema
+    schema = spark_schema(path, nanos_as_long=True) or spark.read.parquet(path).schema
     raw = spark.readStream.schema(schema).parquet(src)
     # dtype-aware ts normalization — see sources.testdata._normalize_event_ts
     from ..sources.testdata import _normalize_event_ts

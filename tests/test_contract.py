@@ -14,6 +14,11 @@ def test_queries_oracle_keys_consistent():
         assert callable(fn), name
 
 
+def test_get_spark_sizes_the_codegen_cache(spark):
+    # warm rounds must reuse compiled classes (session.get_spark)
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2000"
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()

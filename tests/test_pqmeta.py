@@ -106,7 +106,7 @@ def test_fanout_starved_scan_gate(spark, sf_dir, tmp_path):
 def test_row_groups_gate_short_circuits_and_memoizes(spark, sf_dir, tmp_path, monkeypatch):
     """Round-12 (verdict item 4): the fan-out gate must not open every
     footer of a many-file table just to conclude 'no-op' — it stops at
-    the threshold and memoizes per (path, mtime, threshold)."""
+    the threshold, and a repeated probe reads its footers from the cache."""
     import pyarrow.parquet as pq
 
     from data_engineering_capstone_spark.sources import pqmeta
@@ -125,25 +125,23 @@ def test_row_groups_gate_short_circuits_and_memoizes(spark, sf_dir, tmp_path, mo
         return real(f, *a, **k)
 
     monkeypatch.setattr(pq, "ParquetFile", counting)
-    pqmeta._RG_GATE_CACHE.clear()
     threshold = 4
     assert pqmeta.row_groups_at_least(out, threshold) is True
     # short-circuit: the 16-file directory satisfied threshold=4 after
     # at most `threshold` footers (1 row group per part file here)
     assert len(opened) <= threshold
-    # memoized: the second probe opens nothing
+    # cached: the second probe opens nothing
     opened.clear()
     assert pqmeta.row_groups_at_least(out, threshold) is True
     assert opened == []
     # a starved probe still answers False (single-row-group file)
-    pqmeta._RG_GATE_CACHE.clear()
     assert pqmeta.row_groups_at_least(f"{sf_dir}/nation.parquet", threshold) is False
 
 
 def test_row_groups_gate_reprobes_table_rewritten_in_place(tmp_path, monkeypatch):
     """A part file rewritten in place leaves the directory's own mtime
-    unchanged; the gate must still see the new footers, and the cache
-    keeps one entry per path instead of one per stamp."""
+    unchanged; the footer cache must still see the new footer, and it
+    keeps one key per live file instead of one per version."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -163,8 +161,10 @@ def test_row_groups_gate_reprobes_table_rewritten_in_place(tmp_path, monkeypatch
         opened.append(f)
         return real(f, *a, **k)
 
+    def keys():
+        return [k for k in pqmeta._FOOTERS if k.startswith(out)]
+
     monkeypatch.setattr(pq, "ParquetFile", counting)
-    pqmeta._RG_GATE_CACHE.clear()
     assert pqmeta.row_groups_at_least(out, 3) is False
     assert opened == [part]
 
@@ -175,9 +175,110 @@ def test_row_groups_gate_reprobes_table_rewritten_in_place(tmp_path, monkeypatch
 
     opened.clear()
     assert pqmeta.row_groups_at_least(out, 3) is True
-    assert opened == [part]  # probed again, not served from the cache
-    assert list(pqmeta._RG_GATE_CACHE) == [out]
+    assert opened == [part]  # read again, not served from the cache
+    assert keys() == [part]
+    assert pqmeta.parquet_row_count(out) == 300 and opened == [part]
 
+    # a rewrite under new part-file names drops the old file's key
+    os.remove(part)
+    pq.write_table(rows, str(table_dir / "part-1.parquet"))
+    assert pqmeta.parquet_row_groups(out) == 1
+    assert keys() == [str(table_dir / "part-1.parquet")]
+
+
+def _catalog_parquet_files():
+    """The catalog's parquet files: the driver's testdata and the
+    benchmark's byte copies."""
+    import glob
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return sorted(glob.glob("/root/testdata/*/*.parquet")
+                  + glob.glob(os.path.join(repo, "perfbench", "data", "sf0.1", "*.parquet")))
+
+
+def test_spark_schema_matches_inference_on_catalog_tables(spark):
+    from data_engineering_capstone_spark.sources.pqmeta import spark_schema
+
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    paths = _catalog_parquet_files()
+    assert paths
+    for p in paths:
+        assert spark_schema(p, nanos_as_long=True) == spark.read.parquet(p).schema, p
+
+
+def test_spark_schema_of_spark_written_and_nanos_files(spark, sf_dir, tmp_path):
+    """A Spark-written directory uses the schema Spark recorded; a
+    TIMESTAMP(NANOS) column maps to ``long`` only for a caller reading
+    with ``nanosAsLong`` on (with it off, a given ``long`` would read
+    raw nanos where inference raises)."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_engineering_capstone_spark.sources.pqmeta import spark_schema
+
+    out = str(tmp_path / "spark_written")
+    spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(3).write.parquet(out)
+    assert spark_schema(out) == spark.read.parquet(out).schema
+    # Spark records non-null fields, elements and values; reads make them nullable
+    strict = str(tmp_path / "spark_written_not_null")
+    spark.range(6).selectExpr("id", "array(CAST(id AS FLOAT)) AS v", "map('k', id) AS m",
+                              "named_struct('x', id) AS s").write.parquet(strict)
+    assert spark_schema(strict) == spark.read.parquet(strict).schema
+
+    ns = str(tmp_path / "ns.parquet")
+    ts = [datetime.datetime(2024, 1, 1, 0, 0, 0, 1)]
+    pq.write_table(pa.table({"id": pa.array([1], pa.int64()),
+                             "ts": pa.array(ts, pa.timestamp("ns"))}), ns)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    assert spark_schema(ns, nanos_as_long=True) == spark.read.parquet(ns).schema
+    assert spark_schema(ns) is None
+
+
+def test_spark_schema_unmapped_gives_none(spark, sf_dir, tmp_path):
+    """Never a guess: a type outside the mapped set, INT96 timestamps,
+    partition subdirectories and a missing path leave Spark to infer."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_engineering_capstone_spark.sources.pqmeta import spark_schema
+
+    small = str(tmp_path / "int8.parquet")
+    pq.write_table(pa.table({"x": pa.array([1], pa.int8())}), small)
+    assert spark_schema(small) is None
+    int96 = str(tmp_path / "int96.parquet")
+    pq.write_table(pa.table({"ts": pa.array([datetime.datetime(2024, 1, 1)], pa.timestamp("ns"))}),
+                   int96, use_deprecated_int96_timestamps=True)
+    assert spark_schema(int96, nanos_as_long=True) is None
+    parted = str(tmp_path / "parted")
+    spark.read.parquet(f"{sf_dir}/nation.parquet").write.partitionBy("n_regionkey").parquet(parted)
+    assert spark_schema(parted) is None
+    assert spark_schema(str(tmp_path / "nope")) is None
+
+
+def test_load_table_reads_both_event_generations(spark, sf_dir, tmp_path):
+    """events.ts as TIMESTAMP(NANOS) (older testdata) and as
+    timestamp[us] (current): one micro-precision timestamp either way."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_engineering_capstone_spark.sources.testdata import load_table
+
+    ts = [datetime.datetime(2024, 3, 1, 12, 0, 0, 7)]
+    for unit in ("ns", "us"):
+        d = tmp_path / unit
+        d.mkdir()
+        pq.write_table(pa.table({"event_id": pa.array([1], pa.int64()),
+                                 "ts": pa.array(ts, pa.timestamp(unit))}),
+                       str(d / "events.parquet"))
+        df = load_table(spark, str(d), "events")
+        assert dict(df.dtypes)["ts"] == "timestamp", unit
+        assert df.collect()[0]["ts"] == ts[0], unit
 
 
 def _footer_rows_stub(monkeypatch, rows_per_file):

@@ -72,6 +72,9 @@ INTENTIONAL_CROSS = {
     "etl_benford_report",  # 9-row digit table x 1-row broadcast total
     "etl_psi_drift_kll",  # same shape as etl_psi_drift with KLL-sketch
                           # boundaries (1-row broadcasts)
+    "stream_psi_drift",  # same shape as etl_psi_drift: 1-row broadcast
+                         # boundary array, and <=10-row reference bucket
+                         # table x 1-row totals
 }
 
 # Entries allowed to run a grouped-agg pandas UDF WITHOUT the
@@ -429,8 +432,13 @@ def main() -> int:
     catalog = load_all()
     bad = 0
     for name in names:
-        df = catalog[name].fn(spark, sf_dir)
-        plan = plan_text(df)
+        try:
+            plan = plan_text(catalog[name].fn(spark, sf_dir))
+        except Exception as exc:  # noqa: BLE001 — report it, audit the rest
+            bad += 1
+            first_line = str(exc).partition("\n")[0]
+            print(f"ERROR {name}: {first_line}")
+            continue
         if dump_dir:
             os.makedirs(dump_dir, exist_ok=True)
             with open(os.path.join(dump_dir, f"{name}.txt"), "w") as f:
