@@ -223,7 +223,6 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     depth with lineage control) see llm/clustering.py's label
     propagation.
     """
-    prep(spark)
     from .sources.testdata import load_table
 
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_rc")
@@ -271,7 +270,6 @@ def sql_collation_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .sources.testdata import load_table
 
-    prep(spark)
     p = load_table(spark, sf_dir, "part")
     mixed = p.select(
         F.when(F.col("p_partkey") % 2 == 0, F.lower("p_brand"))

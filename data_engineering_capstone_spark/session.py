@@ -88,8 +88,8 @@ def get_spark(
         # Static: sizes the JVM-wide cache of compiled generated classes.
         # Guava splits the default 100 over 4 segments, and the 97
         # distinct classes of one round of the four catalog_mix queries
-        # evicted each other: warm rounds recompiled 12-32 of them
-        # (0.4-0.5 s of Janino). At 2000 every warm round compiled 0.
+        # (sf0.1, one session) evicted each other: each warm round
+        # recompiled 32-49 of them with Janino. At 2000 it compiled 0.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     cds = _cds_options() if SparkContext._gateway is None else None

@@ -186,22 +186,18 @@ def test_row_groups_gate_reprobes_table_rewritten_in_place(tmp_path, monkeypatch
     assert keys() == [str(table_dir / "part-1.parquet")]
 
 
-def _catalog_parquet_files():
-    """The catalog's parquet files: the driver's testdata and the
-    benchmark's byte copies."""
+def test_spark_schema_matches_inference_on_catalog_tables(spark, sf_dir):
+    """Every table the catalog reads: the driver's testdata at each
+    scale and the benchmark's byte copies."""
     import glob
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    return sorted(glob.glob("/root/testdata/*/*.parquet")
-                  + glob.glob(os.path.join(repo, "perfbench", "data", "sf0.1", "*.parquet")))
-
-
-def test_spark_schema_matches_inference_on_catalog_tables(spark):
     from data_engineering_capstone_spark.sources.pqmeta import spark_schema
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    paths = _catalog_parquet_files()
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = glob.glob(os.path.join(os.path.dirname(sf_dir), "*", "*.parquet")) + glob.glob(
+        os.path.join(repo, "perfbench", "data", "sf0.1", "*.parquet"))
     assert paths
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     for p in paths:
         assert spark_schema(p, nanos_as_long=True) == spark.read.parquet(p).schema, p
 
