@@ -70,8 +70,8 @@ def check_suite_single_pass(
     launch their own job — three scans of the fact table. At audit time
     on a big fact that triples the I/O for checks that are all
     scan-level aggregates; this fused form computes row count, distinct
-    key count, and per-column null counts in one pass (measured in
-    tools/i94_scale_probe.py: 16.6 s -> one-scan time at 198M rows).
+    key count, and per-column null counts in one pass (BASELINE.md,
+    round 5: the three checks took 16.6 s at 198M replicated I94 rows).
     Results are identical to running the three checks separately
     (pinned by tests/test_etl.py); keep the individual functions for
     checks over DIFFERENT frames (e.g. completeness across

@@ -210,35 +210,19 @@ def lsh_candidate_pairs(
     id_col: str,
     sig_col: str = "signature",
     num_bands: int = 16,
-    num_hashes: int | None = None,
+    *,
+    num_hashes: int,
 ) -> DataFrame:
     """LSH banding: docs agreeing on any band become a candidate pair.
 
     Emits distinct (id_a, id_b) with id_a < id_b. The only shuffle keys
     are (band_idx, band_hash) — bounded-size buckets by construction.
 
-    When ``num_hashes`` (the signature length) is known statically, the
-    per-band hash is ``F.hash`` over fixed ``element_at`` positions —
-    whole-stage codegen, no array allocation. The dynamic fallback
-    (unknown signature length) slices inside an interpreted
-    ``transform`` lambda; callers that know their signature width
-    should pass it (round 4 — same per-element-allocation lesson as
-    the ngrams rewrite).
+    ``num_hashes`` is the signature length: each band hashes fixed
+    ``element_at`` positions (:func:`_static_band_array` — whole-stage
+    codegen, no array allocation).
     """
-    if num_hashes is not None:
-        bands = _static_band_array(sig_col, num_bands, num_hashes)
-    else:
-        rows_per_band = F.size(F.col(sig_col)) / num_bands
-        bands = F.transform(
-            F.sequence(F.lit(0), F.lit(num_bands - 1)),
-            lambda b: F.hash(
-                F.slice(
-                    F.col(sig_col),
-                    (b * rows_per_band + 1).cast("int"),
-                    rows_per_band.cast("int"),
-                )
-            ),
-        )
+    bands = _static_band_array(sig_col, num_bands, num_hashes)
     banded = df.select(
         F.col(id_col),
         F.posexplode(bands).alias("band_idx", "band_hash"),
@@ -278,9 +262,9 @@ def minhash_near_dups(
     failure mode): k byte-identical copies of one page share every band
     hash, so each of the 16 band buckets holds all k copies and the
     bucket self-join emits ~16·k²/2 candidate rows — measured 817M
-    candidates for one 10k-copy template (tools/template_spam_probe.py,
-    SCALE.md §12). Since identical docs ARE duplicates by definition,
-    no signature estimate is needed to pair them: with the flag on, the
+    candidates for one 10k-copy template (SCALE.md §12). Since identical
+    docs ARE duplicates by definition, no signature estimate is needed
+    to pair them: with the flag on, the
     corpus is first collapsed to one representative per distinct
     normalized text (md5 fingerprint groupBy — the exact_dedup plan,
     linear, bodies never shuffle), LSH runs over representatives only,
@@ -343,7 +327,7 @@ def minhash_near_dups(
     # session. (On a multi-node cluster prefer reliable checkpointing or
     # an explicit parquet materialization for fault tolerance.)
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n).localCheckpoint(eager=True)
-    pairs = lsh_candidate_pairs(sigs, id_col, "signature", num_bands, num_hashes)
+    pairs = lsh_candidate_pairs(sigs, id_col, "signature", num_bands, num_hashes=num_hashes)
     sa = sigs.select(F.col(id_col).alias("id_a"), F.col("signature").alias("sig_a"))
     sb = sigs.select(F.col(id_col).alias("id_b"), F.col("signature").alias("sig_b"))
     return (
@@ -460,7 +444,7 @@ def minhash_delta_pairs(
         )
     )
 
-    within_cand = lsh_candidate_pairs(new_sigs, id_col, "signature", num_bands, num_hashes)
+    within_cand = lsh_candidate_pairs(new_sigs, id_col, "signature", num_bands, num_hashes=num_hashes)
     sa = new_sigs.select(F.col(id_col).alias("id_a"), F.col("signature").alias("sig_a"))
     sb = new_sigs.select(F.col(id_col).alias("id_b"), F.col("signature").alias("sig_b"))
     within = (

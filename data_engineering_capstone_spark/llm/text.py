@@ -90,15 +90,6 @@ def punct_ratio(text_col: Column | str) -> Column:
     return F.when(total > 0, punct / total).otherwise(F.lit(0.0))
 
 
-def stopword_ratio(text_col: Column | str, stopwords: list[str] | None = None) -> Column:
-    """Fraction of tokens that are (English) stopwords."""
-    sw = stopwords if stopwords is not None else LANG_PROFILES["en"]
-    t = tokens(text_col)
-    n = F.size(t)
-    hits = F.size(F.filter(t, lambda x: x.isin(sw)))
-    return F.when(n > 0, hits / n).otherwise(F.lit(0.0))
-
-
 def mean_token_len(text_col: Column | str) -> Column:
     """Mean token length = non-whitespace chars / token count.
 

@@ -4,9 +4,8 @@ A plain ``SUM(x) OVER (ORDER BY k)`` with no PARTITION BY forces Spark to
 sort-collapse the whole table into ONE task — fine at sf0.1, fatal at
 100 TB. The two-phase form here keeps every stage distributed:
 
-1. assign each row a coarse *bucket* along the order key (any
-   monotone-in-key expression works; dense integer ids use
-   ``floor(key / bucket_size)``),
+1. assign each row a coarse *bucket* along the order key,
+   ``floor(key / bucket_size)`` for dense integer ids,
 2. aggregate per-bucket sums (map-side partial combine, tiny result),
 3. run the cumulative sum over the bucket sums only — thousands of rows,
    not billions, so the single-partition window is safe,
@@ -34,19 +33,16 @@ def global_running_sum(
     order_col: str,
     value_col: str,
     out_col: str = "running_sum",
-    bucket: Column | None = None,
     bucket_size: int = 1024,
 ) -> DataFrame:
     """Add ``out_col`` = inclusive running sum of ``value_col`` over the
     total order of ``order_col``, without a single-partition window over
-    the data.
-
-    ``bucket`` must be monotone non-decreasing in ``order_col``; default
-    ``floor(order_col / bucket_size)`` suits dense integer keys. For
-    arbitrary keys pass e.g. a range-partitioner boundary expression.
+    the data. Buckets are ``floor(order_col / bucket_size)``, which suits
+    dense integer keys.
     """
-    b = bucket if bucket is not None else F.floor(F.col(order_col) / F.lit(bucket_size))
-    withb = df.withColumn("__bkt", b.cast("long"))
+    withb = df.withColumn(
+        "__bkt", F.floor(F.col(order_col) / F.lit(bucket_size)).cast("long")
+    )
 
     # Phase 1: per-bucket totals — one tiny row per bucket.
     bucket_sums = withb.groupBy("__bkt").agg(F.sum(value_col).alias("__bkt_sum"))
@@ -85,7 +81,7 @@ def keyed_running_sum(
     ``SUM(x) OVER (PARTITION BY key ORDER BY ...)`` puts each key's
     ENTIRE history in one task's sort — fine for uniform keys, fatal
     when one key carries a large share of the data (the celebrity-user /
-    template-spam / null-key shape; tools/skew_probe.py measures it).
+    template-spam / null-key shape; SCALE.md §27 measures it).
     Salting (operators/skew.py) rescues aggregates but not windows: a
     running sum is order-dependent, so random salt destroys it.
 

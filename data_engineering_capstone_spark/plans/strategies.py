@@ -37,9 +37,10 @@ def gated_broadcast(
     sf_dir: str,
     df: DataFrame,
     table: str,
+    *,
+    key: str | list[str],
     budget_bytes: int = 256 << 20,
     row_bytes: int = 64,
-    key: str | list[str] | None = None,
 ) -> DataFrame:
     """q7's SIZE-GATED broadcast hint as the house one-liner (round-11:
     applied to every forced broadcast of an SF-PROPORTIONAL table —
@@ -51,26 +52,19 @@ def gated_broadcast(
     ``budget_bytes`` — zero Spark jobs, and deliberately ignoring
     filter selectivity so the gate only ever UNDER-broadcasts. Past the
     gate the join must not degrade to a bare session-width SMJ (the q9
-    OOM class the gate exists to prevent): pass ``key`` — the join key
-    column(s) on THIS side — and the fallback repartitions this side at
-    the table's footer width, which EnsureRequirements propagates to
-    the fact side too (one plan-encoded side suffices, the round-11
-    join-width law). Without ``key`` the past-gate join ships hint-free
-    at session width — legacy shape, kept only for call sites whose
-    partner side already carries an explicit width.
+    OOM class the gate exists to prevent): ``key`` — the join key
+    column(s) on THIS side — repartitions this side at the table's
+    footer width, which EnsureRequirements propagates to the fact side
+    too (one plan-encoded side suffices, the round-11 join-width law).
     """
     from pyspark.sql.functions import broadcast
 
+    from ..sources.pqmeta import fact_width
+
     if footer_fits_broadcast(sf_dir, table, budget_bytes, row_bytes):
         return broadcast(df)
-    if key is not None:
-        from ..sources.pqmeta import fact_width
-
-        keys = [key] if isinstance(key, str) else list(key)
-        return df.repartition(
-            fact_width(df.sparkSession, sf_dir, table), *keys
-        )
-    return df
+    keys = [key] if isinstance(key, str) else list(key)
+    return df.repartition(fact_width(df.sparkSession, sf_dir, table), *keys)
 
 
 def footer_fits_broadcast(

@@ -21,16 +21,13 @@ from .llm.dedup import (
     ngram_jaccard_pairs,
     simhash_near_dups,
 )
-from .llm.similarity import cosine_topk, embedding_near_dup_pairs, ivf_ann_topk, lsh_ann_topk
+from .llm.similarity import cosine_topk, ivf_ann_topk, lsh_ann_topk
 from .llm.text import (
-    BPE_ISH_PATTERN,
     bpe_ish_token_count,
     language_id,
     mean_token_len,
     punct_ratio,
-    quality_score,
     rolling_fingerprint,
-    stopword_ratio,
 )
 from .functions.strings import ngrams, token_count
 from .session import scratch_dir

@@ -299,8 +299,8 @@ def ref_i94_star_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cannot prune columns through dropDuplicates (which row survives is
     # observable), so without this the key-dedup shuffle carries all ~30
     # SAS columns. The rollup needs 10; declaring that up front cuts the
-    # dedup exchange width ~3x (measured in tools/i94_scale_probe.py at
-    # 49.5M replicated rows). Output is identical: cicid is the dedup
+    # dedup exchange width ~3x (measured at 49.5M replicated rows,
+    # BASELINE.md round 5). Output is identical: cicid is the dedup
     # key and every retained column rides with its row.
     fact = spark.read.parquet(_SAS_DATA).select(
         "cicid", "i94yr", "i94mon", "i94cit", "i94mode", "i94addr",

@@ -15,7 +15,7 @@ from .catalog import query
 from .plans.strategies import gated_broadcast
 from .functions.money import sum_cents_exact, to_cents
 from .operators.relational import anti_join, broadcast_dim_join
-from .operators.topk import top_k, top_k_per_group
+from .operators.topk import top_k
 from .sources.readers import local_frame
 from .sources.testdata import load_table as _t
 
@@ -604,8 +604,8 @@ def window_running_skew_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     window_running_orders's cumulative columns.
 
     The plain form sorts each customer's whole history in one task; a
-    hot key (celebrity user, template spam, null bucket — the shapes
-    tools/skew_probe.py builds) turns that task into the job's critical
+    hot key (celebrity user, template spam, null bucket — SCALE.md §27
+    measures the shape) turns that task into the job's critical
     path, and salting can't rescue an order-dependent window. Here the
     hot key fans out over order-aligned date chunks: the per-key window
     runs over AT MOST ~44 chunk-total rows per key regardless of key

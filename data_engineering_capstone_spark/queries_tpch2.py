@@ -90,11 +90,8 @@ def q4_priority_late_ship(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q4_plan(orders: DataFrame, lineitem: DataFrame,
-            width: int | None = None) -> DataFrame:
-    """The shipped q4 plan over supplied inputs — factored out so the
-    scale tools (the round-11 view-doubled 4096× point) race the EXACT
-    entry plan on synthetic unions instead of re-implementing it.
+def q4_plan(orders: DataFrame, lineitem: DataFrame, width: int) -> DataFrame:
+    """The shipped q4 plan over supplied inputs.
 
     ``width`` pins the semi join's exchange width plan-side (round-11
     width law). Only the LINEITEM side repartitions: Catalyst's
@@ -115,9 +112,8 @@ def q4_plan(orders: DataFrame, lineitem: DataFrame,
             F.col("l_shipdate")
             > F.lit("1996-01-01").cast("timestamp") + F.expr("INTERVAL 60 DAYS")
         )
+        .repartition(width, "l_orderkey")
     )
-    if width is not None:
-        l = l.repartition(width, "l_orderkey")
     cond = (F.col("l_orderkey") == F.col("o_orderkey")) & (
         F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
     )

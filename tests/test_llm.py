@@ -725,10 +725,9 @@ def test_minhash_template_spam_collapse(spark):
     """Mega-bucket guard (round-3 verdict task 5): k identical template
     copies share every band hash, so the bucket self-join is ~16*k^2/2
     candidate rows (measured 800M raw / 50M distinct for k=10k,
-    tools/template_spam_probe.py, SCALE.md §12). collapse_exact=True
-    collapses identical fingerprints to one representative before the
-    signature stage — candidates stay corpus-sized and exact-group
-    membership rides along as n_a/n_b."""
+    SCALE.md §12). collapse_exact=True collapses identical fingerprints
+    to one representative before the signature stage — candidates stay
+    corpus-sized and exact-group membership rides along as n_a/n_b."""
     from data_engineering_capstone_spark.llm.dedup import (
         lsh_candidate_pairs,
         minhash_near_dups,
@@ -747,7 +746,7 @@ def test_minhash_template_spam_collapse(spark):
     # uncollapsed: the template group alone makes >= 16 * k*(k-1)/2 raw
     # candidate rows — the quadratic shuffle the collapse exists to kill
     sigs = minhash_signatures(corpus, "text", "doc_id")
-    banded_raw = lsh_candidate_pairs(sigs, "doc_id")  # distinct pairs
+    banded_raw = lsh_candidate_pairs(sigs, "doc_id", num_hashes=64)  # distinct pairs
     assert banded_raw.count() >= k * (k - 1) // 2
 
     collapsed = minhash_near_dups(

@@ -3,14 +3,12 @@ zero-shuffle join plan."""
 
 from __future__ import annotations
 
-import io
-from contextlib import redirect_stdout
-
 import datetime as dt
 
 from pyspark.sql import functions as F
 
 from data_engineering_capstone_spark.operators.merge import scd2_apply, upsert
+from data_engineering_capstone_spark.plans.strategies import physical_plan
 
 
 def test_upsert_semantics(spark):
@@ -76,11 +74,7 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
 
     cat = load_all()
     df = cat["bucketed_join_zero_shuffle"].fn(spark, sf_dir)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    join_part = plan.split("HashAggregate")[-1] if "SortMergeJoin" in plan else plan
+    plan = physical_plan(df)
     # Exchanges exist above the join (for the groupBy/orderBy) but the
     # join inputs themselves must come straight from the bucketed scans.
     sm = plan.find("SortMergeJoin")

@@ -132,33 +132,27 @@ def test_preset_guard_pairwise_entries_all_scale_measured(spark, sf_dir):
         _sys.path.remove(tools_dir)
 
 
-def test_i94_star_rollup_plan_broadcasts_all_dims(spark):
+def test_i94_star_rollup_plan_broadcasts_all_dims(spark, sf_dir):
     """Round-5 verdict task 5 (plan half): the reference-shaped star
     rollup must broadcast all five label-file dims (no fact-side
     sort-merge join) and aggregate in two phases (partial below the
     exchange) — the plan properties that let the pipeline scale from
-    3.1M to 198M measured rows (tools/i94_scale_probe.py, BASELINE.md)."""
-    import os as _os
-    import sys as _sys
+    3.1M to 198M measured rows (BASELINE.md, round 5)."""
+    import re
 
-    tools_dir = _os.path.join(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))), "tools"
-    )
-    _sys.path.insert(0, tools_dir)
+    from data_engineering_capstone_spark.catalog import load_all
+
+    df = load_all()["ref_i94_star_rollup"].fn(spark, sf_dir)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        from i94_scale_probe import assert_plan_shape, rollup_df
-        from data_engineering_capstone_spark.queries_refdata import _SAS_DATA
-
-        df = rollup_df(spark, _SAS_DATA)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            shape = assert_plan_shape(df)
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", "true")
-        assert shape["sort_merge_joins"] == 0
-        assert shape["broadcast_joins"] >= 5
+        plan = physical_plan(df)
     finally:
-        _sys.path.remove(tools_dir)
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert plan.count("BroadcastHashJoin") >= 5, plan
+    assert "SortMergeJoin" not in plan, plan
+    # two-phase rollup: a partial HashAggregate below the exchange and a
+    # final one above it
+    assert len(re.findall(r"\bHashAggregate\b", plan)) >= 2, plan
 
 
 def test_dynamic_partition_pruning_engages(spark, sf_dir, tmp_path):
@@ -436,9 +430,10 @@ def test_fact_fact_exchange_width_law(spark, sf_dir):
 def test_gated_broadcast_footer_predicate(spark, sf_dir):
     """Round-11: every forced broadcast of an SF-proportional table
     (part/supplier/customer slices in the TPC-H shapes) now rides
-    plans/strategies.gated_broadcast — hint under a footer-byte budget,
-    hint-free past it (AQE decides; never a forced unbounded build,
-    the q7/anti_semi standard)."""
+    plans/strategies.gated_broadcast — hint under a footer-byte budget;
+    past it, no hint (never a forced unbounded build, the q7/anti_semi
+    standard) and the key side repartitions at the table's footer
+    width."""
     from data_engineering_capstone_spark.plans.strategies import (
         footer_fits_broadcast,
         gated_broadcast,
@@ -451,17 +446,12 @@ def test_gated_broadcast_footer_predicate(spark, sf_dir):
 
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
-    hinted = o.join(gated_broadcast(sf_dir, c, "customer"), o.o_custkey == c.c_custkey)
-    assert "BroadcastHashJoin" in physical_plan(hinted)
-    # past the gate: no hint — and the q10 fallback branch pins widths
-    past = gated_broadcast(sf_dir, c, "customer", budget_bytes=1)
-    assert past is c  # unhinted passthrough
-    w = 48
-    widthed = o.repartition(w, "o_custkey").join(
-        c.repartition(w, "c_custkey"), o.o_custkey == c.c_custkey
+    hinted = o.join(
+        gated_broadcast(sf_dir, c, "customer", key="c_custkey"), o.o_custkey == c.c_custkey
     )
-    plan = physical_plan(widthed)
-    assert "REPARTITION_BY_NUM" in plan
+    assert "BroadcastHashJoin" in physical_plan(hinted)
+    past = gated_broadcast(sf_dir, c, "customer", key="c_custkey", budget_bytes=1)
+    assert "REPARTITION_BY_NUM" in physical_plan(o.join(past, o.o_custkey == c.c_custkey))
 
 
 def test_final_sort_law_fact_grain_entries_unsorted(spark, sf_dir):

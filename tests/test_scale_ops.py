@@ -63,11 +63,9 @@ def test_partitioned_read_prunes_partitions(spark, sf_dir, tmp_path):
     predicate over a year-partitioned sink must appear as a
     PartitionFilter on the scan (skipping other years' files before any
     I/O), not as a post-scan row filter."""
-    import io
-    from contextlib import redirect_stdout
-
     from pyspark.sql import functions as F
 
+    from data_engineering_capstone_spark.plans.strategies import physical_plan
     from data_engineering_capstone_spark.sources.testdata import load_table
     from data_engineering_capstone_spark.sources.writers import write_parquet
 
@@ -78,10 +76,7 @@ def test_partitioned_read_prunes_partitions(spark, sf_dir, tmp_path):
     write_parquet(o, out, partition_by=["order_year"])
 
     df = spark.read.parquet(out).filter(F.col("order_year") == 1996)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
+    plan = physical_plan(df)
     assert "PartitionFilters" in plan
     pf_line = next(l for l in plan.splitlines() if "PartitionFilters" in l)
     assert "1996" in pf_line, pf_line

@@ -155,8 +155,7 @@ def main() -> int:
         # the driver stay at the default; python workers spawn per
         # executor from the same interpreter on PATH. Python workers get
         # their own work dir, so the package must ride PYTHONPATH for
-        # entries whose closures import it (mapInPandas kernels) — the
-        # streaming_cluster_probe convention.
+        # entries whose closures import it (mapInPandas kernels).
         {"spark.executor.memory": f"{EXEC_MB}m",
          "spark.executorEnv.PYTHONPATH": os.path.dirname(
              os.path.dirname(os.path.abspath(__file__)))},

@@ -13,21 +13,20 @@ in at least one scale preset (RATIO_SET, LLM_SET) or in the whitelist
 below with a written reason why its pair count is structurally bounded.
 
 Run next to parity:  python tools/preset_guard.py
-Also asserted by tests/test_tools.py.
+Also asserted by tests/test_plans.py::test_preset_guard_pairwise_entries_all_scale_measured.
 """
 
 from __future__ import annotations
 
-import io
 import os
 import re
 import sys
-from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from data_engineering_capstone_spark.catalog import load_all
+from data_engineering_capstone_spark.plans.strategies import physical_plan
 from data_engineering_capstone_spark.session import get_spark
 
 from explain_audit import SKIP  # entries that execute/write on plan construction
@@ -66,13 +65,6 @@ def _presets() -> set[str]:
     from scale_crossover import LLM_SET, RATIO_SET
 
     return set(RATIO_SET) | set(LLM_SET)
-
-
-def plan_text(df) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def pairwise_signals(df, plan: str) -> list[str]:
@@ -118,7 +110,7 @@ def sweep(spark, sf_dir: str, verbose: bool = True):
         if name in SKIP or entry.oracle is None:
             continue
         df = entry.fn(spark, sf_dir)
-        sig = pairwise_signals(df, plan_text(df))
+        sig = pairwise_signals(df, physical_plan(df))
         if not sig:
             continue
         if name in presets:
