@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from ..functions.strings import ngrams, tokens
 from ..operators.prefix import global_running_sum
 from ..sources.readers import local_frame
+from .dedup import shingle_set
 
 
 def repetition_metrics(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -170,6 +171,13 @@ def gopher_rules(
     return df.select(*out)
 
 
+def _shingled(df: DataFrame, text_col: str, id_col: str, n: int, alias: str) -> DataFrame:
+    """One row per (doc, distinct ``n``-gram shingle): ``alias``, ``__s``."""
+    return df.select(
+        F.col(id_col).alias(alias), F.explode(shingle_set(text_col, n)).alias("__s")
+    )
+
+
 def decontaminate(
     corpus: DataFrame,
     benchmark: DataFrame,
@@ -188,14 +196,8 @@ def decontaminate(
     corpus is never shuffled; at 100 TB hash the shingles to 8-byte keys
     first (same join shape, narrower key).
     """
-    def shingled(df: DataFrame, alias: str) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias(alias),
-            F.explode(F.array_distinct(ngrams(text_col, ngram_n))).alias("__s"),
-        )
-
-    c = shingled(corpus, "__cid")
-    b = shingled(benchmark, "__bid")
+    c = _shingled(corpus, text_col, id_col, ngram_n, "__cid")
+    b = _shingled(benchmark, text_col, id_col, ngram_n, "__bid")
     return (
         c.join(F.broadcast(b), "__s")
         .groupBy("__cid")
@@ -625,12 +627,6 @@ def bloom_decontaminate(
     superset property and FP-rate bound are pinned in tests/test_llm.py.
     """
 
-    def shingled(df: DataFrame, alias: str) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias(alias),
-            F.explode(F.array_distinct(ngrams(text_col, ngram_n))).alias("__s"),
-        )
-
     def bit(col: Column, seed: int) -> Column:
         # seed folded SECOND, so every lane is a function of the one
         # 64-bit xxhash64(col) value — deliberately: that is the
@@ -647,7 +643,7 @@ def bloom_decontaminate(
     # left inline each join would re-run the benchmark shingle explode
     # (same lineage-reuse discipline as llm/spans.py / minhash)
     bits = (
-        shingled(benchmark, "__bid")
+        _shingled(benchmark, text_col, id_col, ngram_n, "__bid")
         .select(
             F.explode(
                 F.array(*[bit(F.col("__s"), i) for i in range(num_hashes)])
@@ -657,7 +653,7 @@ def bloom_decontaminate(
         .localCheckpoint()
     )
 
-    probe = shingled(corpus, "__cid")
+    probe = _shingled(corpus, text_col, id_col, ngram_n, "__cid")
     for i in range(num_hashes):
         set_i = bits.select(F.col("__bit").alias(f"__b{i}"))
         probe = probe.join(

@@ -457,129 +457,44 @@ def minhash_delta_pairs(
     return cross.unionByName(within).distinct()
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold: float = 0.2,
-    shingle_n: int = 2,
-    max_doc_freq: int | None = None,
+def _shingle_overlaps(
+    df: DataFrame, text_col: str, id_col: str, shingle_n: int, max_doc_freq: int
 ) -> DataFrame:
-    """EXACT n-gram Jaccard pairs >= threshold via candidate + verify.
+    """``(id_a, id_b, n_common, n_a, n_b)`` for every doc pair sharing a
+    shingle that occurs in at most ``max_doc_freq`` docs: ``n_common``
+    such shingles in common, ``n_a``/``n_b`` each doc's count of them.
 
-    Candidates come from an inverted shingle index (optionally dropping
-    shingles hotter than ``max_doc_freq`` — they can't discriminate and
-    they drive join skew); each candidate's exact Jaccard is
-    |A∩B| / (|A|+|B|-|A∩B|) counted from the full index. Never builds an
-    all-pairs product.
-
-    Plan shape (round 4): when the df cap is on, the index is built as
-    POSTINGS LISTS — one groupBy(s) shuffle producing (shingle,
-    doc-array), the cap a size filter on the array, pairs generated
-    in-row by a double explode (bounded at cap²/2 per shingle), and the
-    per-doc surviving-shingle sizes derived from the same postings
-    table (the exchange is reused across all three consumers —
-    ReusedExchange, one shuffle of the index instead of three). This
-    replaced a localCheckpoint + anti-join + a⋈b self-join pipeline;
-    measured at 16× sf0.1 (80k docs): 5.9 s → 2.9 s (with the round-4
-    zip_with ngrams rewrite, functions/strings.py, contributing most of
-    the drop). The uncapped path keeps the join form: an unbounded
-    postings array for a stop-shingle would concentrate a hot key's
-    whole posting list in one aggregation buffer.
+    The index is built as POSTINGS LISTS — one groupBy(s) shuffle
+    producing (shingle, doc-array), the cap a size filter on the array,
+    pairs generated in-row by a double explode (bounded at cap²/2 per
+    shingle), and the per-doc sizes derived from the same postings table
+    (the exchange is reused across all three consumers — ReusedExchange,
+    one shuffle of the index instead of three). This replaced a
+    localCheckpoint + anti-join + a⋈b self-join pipeline; measured at
+    16× sf0.1 (80k docs): 5.9 s → 2.9 s (with the round-4 zip_with
+    ngrams rewrite, functions/strings.py, contributing most of the drop).
+    The cap is mandatory: an unbounded postings array for a stop-shingle
+    would concentrate a hot key's whole posting list in one aggregation
+    buffer, and hot shingles can't discriminate anyway.
     """
     par = df.sparkSession.sparkContext.defaultParallelism
     sh = df.repartition(par).select(
         F.col(id_col), F.explode(shingle_set(text_col, shingle_n)).alias("s")
     )
-    if max_doc_freq is not None:
-        # two round-5 shuffle cuts, measured at 64x sf0.1 (320k docs,
-        # 16M shingles):
-        # 1. the index key is a 128-bit hash PAIR of the shingle
-        #    (distinct literal folded first — independent lanes, see
-        #    llm/spans.py), not the string: grouping/exchanging two
-        #    longs beats 13-char strings by ~17% end-to-end; grouping
-        #    by the hash pair IS grouping by the shingle at ~1e-18
-        #    collision odds, so the oracle's string grouping matches.
-        # 2. explicit fan-out after the cap: the capped postings table
-        #    is byte-small, so AQE coalesces the shuffle output to ~1
-        #    partition — but the downstream double-explode work is
-        #    per-PAIR (bounded by cap^2/2 per shingle), which AQE's
-        #    byte heuristic can't see (same fix as
-        #    llm_fuzzy_prefix_pairs: 19 s single-core -> ~1 s).
-        postings = (
-            sh.select(
-                id_col,
-                F.xxhash64(F.lit(0), "s").alias("h1"),
-                F.xxhash64(F.lit(1), "s").alias("h2"),
-            )
-            .groupBy("h1", "h2")
-            .agg(F.collect_set(id_col).alias("ds"))
-            .filter(F.size("ds") <= max_doc_freq)
-            .repartition(par)
-        )
-        sizes = (
-            postings.select(F.explode("ds").alias(id_col))
-            .groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("n_sh"))
-        )
-        common = (
-            postings.select(F.explode("ds").alias("id_a"), "ds")
-            .select("id_a", F.explode("ds").alias("id_b"))
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-    else:
-        sh = sh.localCheckpoint(eager=True)  # reused 3x below (see minhash note)
-        sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-        a = sh.select(F.col(id_col).alias("id_a"), "s")
-        b = sh.select(F.col(id_col).alias("id_b"), "s")
-        common = (
-            a.join(b, "s")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-    na = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        common.join(na, "id_a")
-        .join(nb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def ngram_containment_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold: float = 0.6,
-    shingle_n: int = 2,
-    max_doc_freq: int = 100,
-) -> DataFrame:
-    """ASYMMETRIC near-dup: containment of the smaller shingle set in
-    the larger, ``|A∩B| / min(|A|, |B|)``.
-
-    Jaccard misses quote/subset duplication: a 50-token notice embedded
-    verbatim in a 5,000-token page has Jaccard ≈ 0.01 but containment
-    1.0 — this is the detector for boilerplate inclusions, quoted
-    documents, and page-wraps-snippet spam that symmetric similarity
-    can't see. Same single-shuffle postings plan as
-    :func:`ngram_jaccard_pairs` (the df cap is mandatory here: hot
-    shingles are exactly the boilerplate being hunted, and they drive
-    the join skew); emits ``(id_a, id_b, n_common, containment)``.
-    """
-    par = df.sparkSession.sparkContext.defaultParallelism
-    sh = df.repartition(par).select(
-        F.col(id_col), F.explode(shingle_set(text_col, shingle_n)).alias("s")
-    )
-    # 128-bit hash index key + post-cap fan-out: see ngram_jaccard_pairs
-    # (same two measured shuffle cuts, round 5)
+    # two round-5 shuffle cuts, measured at 64x sf0.1 (320k docs,
+    # 16M shingles):
+    # 1. the index key is a 128-bit hash PAIR of the shingle
+    #    (distinct literal folded first — independent lanes, see
+    #    llm/spans.py), not the string: grouping/exchanging two
+    #    longs beats 13-char strings by ~17% end-to-end; grouping
+    #    by the hash pair IS grouping by the shingle at ~1e-18
+    #    collision odds, so the oracle's string grouping matches.
+    # 2. explicit fan-out after the cap: the capped postings table
+    #    is byte-small, so AQE coalesces the shuffle output to ~1
+    #    partition — but the downstream double-explode work is
+    #    per-PAIR (bounded by cap^2/2 per shingle), which AQE's
+    #    byte heuristic can't see (same fix as
+    #    llm_fuzzy_prefix_pairs: 19 s single-core -> ~1 s).
     postings = (
         sh.select(
             id_col,
@@ -605,9 +520,58 @@ def ngram_containment_pairs(
     )
     na = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
     nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
+    return common.join(na, "id_a").join(nb, "id_b")
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    threshold: float = 0.2,
+    shingle_n: int = 2,
+    max_doc_freq: int = 100,
+) -> DataFrame:
+    """EXACT n-gram Jaccard pairs >= threshold via candidate + verify.
+
+    Candidates come from an inverted shingle index that drops shingles
+    hotter than ``max_doc_freq`` (they can't discriminate and they drive
+    join skew); each candidate's exact Jaccard is
+    |A∩B| / (|A|+|B|-|A∩B|) counted from that index
+    (:func:`_shingle_overlaps`). Never builds an all-pairs product.
+    """
     return (
-        common.join(na, "id_a")
-        .join(nb, "id_b")
+        _shingle_overlaps(df, text_col, id_col, shingle_n, max_doc_freq)
+        .withColumn(
+            "jaccard",
+            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+def ngram_containment_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    threshold: float = 0.6,
+    shingle_n: int = 2,
+    max_doc_freq: int = 100,
+) -> DataFrame:
+    """ASYMMETRIC near-dup: containment of the smaller shingle set in
+    the larger, ``|A∩B| / min(|A|, |B|)``.
+
+    Jaccard misses quote/subset duplication: a 50-token notice embedded
+    verbatim in a 5,000-token page has Jaccard ≈ 0.01 but containment
+    1.0 — this is the detector for boilerplate inclusions, quoted
+    documents, and page-wraps-snippet spam that symmetric similarity
+    can't see. Same capped postings index as :func:`ngram_jaccard_pairs`
+    (:func:`_shingle_overlaps`: hot shingles are exactly the boilerplate
+    being hunted, and they drive the join skew); emits
+    ``(id_a, id_b, n_common, containment)``.
+    """
+    return (
+        _shingle_overlaps(df, text_col, id_col, shingle_n, max_doc_freq)
         .withColumn(
             "containment",
             F.col("n_common") / F.least(F.col("n_a"), F.col("n_b")),

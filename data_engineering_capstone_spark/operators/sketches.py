@@ -98,6 +98,13 @@ def count_min_table(
     detection when exact per-key counts would themselves be the skew
     problem (the counters table is dimension-scale and broadcastable;
     the input is touched once, map-side combined).
+
+    The counters are purely additive, so on a stream Spark's incremental
+    streaming agg IS the sketch merge: each micro-batch folds its partial
+    counters in, and a complete-mode drain (no watermark; counters never
+    retract) is row-identical to this table over the same input, with
+    state bounded by ``depth * width`` however long the stream runs
+    (``stream_count_min_top_users``; tests/test_streaming.py).
     """
     rows = df.select(
         F.explode(

@@ -70,23 +70,23 @@ def _roundtrip_agg(spark: SparkSession, sf_dir: str, customers: DataFrame) -> Da
 def scan_parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parquet schema evolution: an early batch written WITHOUT
     n_regionkey and a later batch WITH it land in one dataset directory;
-    ``mergeSchema=true`` reads the union schema and backfills nulls for
-    the pre-drift files. This is how multi-year 100 TB datasets actually
-    look — columns appear over time, and the scan must reconcile footers
-    per file instead of trusting the first one (mergeSchema costs a
-    footer read per file, so production defaults it OFF and flips it on
-    for drifted datasets; at scale, prefer an explicit schema). The
-    oracle recomputes each batch's expected profile from the source
-    nation view.
+    the scan reads them under the union schema (the later batch's) and
+    backfills nulls for the pre-drift files. This is how multi-year
+    100 TB datasets actually look — columns appear over time, and the
+    scan must not trust the first file's footer. The union schema is
+    given, not merged: ``mergeSchema`` costs a footer read per file, and
+    its column order follows whichever footer is read first, so it
+    changes from run to run; a known schema makes the scan and its plan
+    deterministic (at scale, prefer an explicit schema). The oracle
+    recomputes each batch's expected profile from the source nation view.
     """
     n = _t(spark, sf_dir, "nation")
     path = scratch_dir(spark, "fmt", os.path.basename(sf_dir.rstrip("/")), "schema_evo")
     shutil.rmtree(path, ignore_errors=True)
+    later = n.select("n_nationkey", "n_name", "n_regionkey", F.lit(2).alias("batch"))
     n.select("n_nationkey", "n_name", F.lit(1).alias("batch")).write.parquet(path)
-    n.select(
-        "n_nationkey", "n_name", "n_regionkey", F.lit(2).alias("batch")
-    ).write.mode("append").parquet(path)
-    back = spark.read.option("mergeSchema", "true").parquet(path)
+    later.write.mode("append").parquet(path)
+    back = spark.read.schema(later.schema).parquet(path)
     return (
         back.groupBy("batch")
         .agg(
@@ -342,45 +342,60 @@ def scan_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _roundtrip_agg(spark, sf_dir, back)
 
 
-@query("scan_sas_roundtrip", oracle=_NATION_AGG)
-def scan_sas_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2: SAS scan, exercised end-to-end. customer is serialized as SAS
-    XPORT v5 (sources/xport.py — card records, big-endian NAMESTR, IBM
-    hex-float numerics; every IEEE double converts exactly) and read
-    back through :func:`read_sas`'s pandas fallback — two independent
-    codecs, so a single flipped bit breaks parity. Field widths keep the
-    record at 80 bytes (card-aligned). The writer collects to the driver
-    by design: SAS interchange files are dimension-scale; a 100 TB fact
-    gets converted to parquet once (reference: notebook cell-6) and
-    never re-read as SAS.
-    """
-    from .sources.readers import read_sas
-    from .sources.xport import write_xport
+# customer as a SAS dataset: (name, type, width) per variable. The widths
+# keep an XPORT record at 80 bytes (card-aligned).
+_SAS_CUSTOMER_COLS = [
+    ("CUSTKEY", "num", 8),
+    ("NAME", "char", 48),
+    ("NATKEY", "num", 8),
+    ("ACCTBAL", "num", 8),
+    ("MKTSEG", "char", 16),
+]
 
-    c = _t(spark, sf_dir, "customer")
-    rows = [
+
+def _sas_customer_rows(spark: SparkSession, sf_dir: str) -> list[tuple]:
+    """customer collected to the driver as ``_SAS_CUSTOMER_COLS`` rows
+    (SAS numerics are doubles)."""
+    return [
         (float(r["c_custkey"]), r["c_name"], float(r["c_nationkey"]),
          float(r["c_acctbal"]), r["c_mktsegment"])
-        for r in c.collect()
+        for r in _t(spark, sf_dir, "customer").collect()
     ]
-    cols = [
-        ("CUSTKEY", "num", 8),
-        ("NAME", "char", 48),
-        ("NATKEY", "num", 8),
-        ("ACCTBAL", "num", 8),
-        ("MKTSEG", "char", 16),
-    ]
-    path = scratch_dir(spark, "fmt", os.path.basename(sf_dir.rstrip("/")), "customer_xpt")
-    fp = os.path.join(path, "customer.xpt")
-    write_xport(fp, cols, rows, dsname="CUSTOMER")
-    back = read_sas(spark, fp).select(
+
+
+def _read_sas_customer(spark: SparkSession, fp: str) -> DataFrame:
+    """A SAS file of ``_SAS_CUSTOMER_COLS`` read back through
+    :func:`read_sas` under customer's column names and types (SAS pads
+    char values with blanks, so they are trimmed)."""
+    from .sources.readers import read_sas
+
+    return read_sas(spark, fp).select(
         F.col("CUSTKEY").cast("long").alias("c_custkey"),
         F.trim(F.col("NAME")).alias("c_name"),
         F.col("NATKEY").cast("int").alias("c_nationkey"),
         F.col("ACCTBAL").alias("c_acctbal"),
         F.trim(F.col("MKTSEG")).alias("c_mktsegment"),
     )
-    return _roundtrip_agg(spark, sf_dir, back)
+
+
+@query("scan_sas_roundtrip", oracle=_NATION_AGG)
+def scan_sas_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A2: SAS scan, exercised end-to-end. customer is serialized as SAS
+    XPORT v5 (sources/xport.py — card records, big-endian NAMESTR, IBM
+    hex-float numerics; every IEEE double converts exactly) and read
+    back through :func:`read_sas`'s pandas fallback — two independent
+    codecs, so a single flipped bit breaks parity. The writer collects to
+    the driver by design: SAS interchange files are dimension-scale; a
+    100 TB fact gets converted to parquet once (reference: notebook
+    cell-6) and never re-read as SAS.
+    """
+    from .sources.xport import write_xport
+
+    rows = _sas_customer_rows(spark, sf_dir)
+    path = scratch_dir(spark, "fmt", os.path.basename(sf_dir.rstrip("/")), "customer_xpt")
+    fp = os.path.join(path, "customer.xpt")
+    write_xport(fp, _SAS_CUSTOMER_COLS, rows, dsname="CUSTOMER")
+    return _roundtrip_agg(spark, sf_dir, _read_sas_customer(spark, fp))
 
 
 @query("scan_xport_distributed", oracle=_NATION_AGG)
@@ -397,22 +412,10 @@ def scan_xport_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.pyds import XportDataSource
     from .sources.xport import write_xport
 
-    c = _t(spark, sf_dir, "customer")
-    rows = [
-        (float(r["c_custkey"]), r["c_name"], float(r["c_nationkey"]),
-         float(r["c_acctbal"]), r["c_mktsegment"])
-        for r in c.collect()
-    ]
-    cols = [
-        ("CUSTKEY", "num", 8),
-        ("NAME", "char", 48),
-        ("NATKEY", "num", 8),
-        ("ACCTBAL", "num", 8),
-        ("MKTSEG", "char", 16),
-    ]
+    rows = _sas_customer_rows(spark, sf_dir)
     path = scratch_dir(spark, "fmt", os.path.basename(sf_dir.rstrip("/")), "customer_xpt_ds")
     fp = os.path.join(path, "customer.xpt")
-    write_xport(fp, cols, rows, dsname="CUSTOMER")
+    write_xport(fp, _SAS_CUSTOMER_COLS, rows, dsname="CUSTOMER")
     try:
         spark.dataSource.register(XportDataSource)
     except Exception:
@@ -614,33 +617,13 @@ def scan_sas7bdat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the exact code path a user with a real .sas7bdat file hits when
     the saurfang jar is absent.
     """
-    from .sources.readers import read_sas
     from .sources.sas7bdat_writer import write_sas7bdat
 
-    c = _t(spark, sf_dir, "customer")
-    rows = [
-        (float(r["c_custkey"]), r["c_name"], float(r["c_nationkey"]),
-         float(r["c_acctbal"]), r["c_mktsegment"])
-        for r in c.collect()
-    ]
-    cols = [
-        ("CUSTKEY", "num", 8),
-        ("NAME", "char", 48),
-        ("NATKEY", "num", 8),
-        ("ACCTBAL", "num", 8),
-        ("MKTSEG", "char", 16),
-    ]
+    rows = _sas_customer_rows(spark, sf_dir)
     path = scratch_dir(spark, "fmt", os.path.basename(sf_dir.rstrip("/")), "customer_sas7bdat")
     fp = os.path.join(path, "customer.sas7bdat")
-    write_sas7bdat(fp, cols, rows, dataset="CUSTOMER", page_size=16384)
-    back = read_sas(spark, fp).select(
-        F.col("CUSTKEY").cast("long").alias("c_custkey"),
-        F.trim(F.col("NAME")).alias("c_name"),
-        F.col("NATKEY").cast("int").alias("c_nationkey"),
-        F.col("ACCTBAL").alias("c_acctbal"),
-        F.trim(F.col("MKTSEG")).alias("c_mktsegment"),
-    )
-    return _roundtrip_agg(spark, sf_dir, back)
+    write_sas7bdat(fp, _SAS_CUSTOMER_COLS, rows, dataset="CUSTOMER", page_size=16384)
+    return _roundtrip_agg(spark, sf_dir, _read_sas_customer(spark, fp))
 
 
 @query("sink_avro_distributed", oracle=_NATION_AGG)

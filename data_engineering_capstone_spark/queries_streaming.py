@@ -223,7 +223,7 @@ def stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("stream_count_min_top_users", oracle=None)
 def stream_count_min_top_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming heavy hitters via a count-min sketch maintained as
-    streaming state (streaming/windows.py:streaming_count_min): the
+    streaming state (operators/sketches.py:count_min_table): the
     (row, pos) counter table is an additive aggregation, so the
     incremental streaming agg IS the sketch-merge and state stays
     bounded at depth x width counters no matter how long the stream
@@ -236,12 +236,11 @@ def stream_count_min_top_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch count_min_table and its estimates bounded below by exact
     counts in tests/test_streaming.py.
     """
-    from .operators.sketches import count_min_estimate
+    from .operators.sketches import count_min_estimate, count_min_table
     from .sources.testdata import load_table
-    from .streaming.windows import streaming_count_min
 
     sketch = run_available_now(
-        streaming_count_min(_events(spark, sf_dir)), "complete"
+        count_min_table(_events(spark, sf_dir), "user_id"), "complete"
     )
     keys = load_table(spark, sf_dir, "events").select("user_id").distinct()
     est = count_min_estimate(sketch, keys, "user_id")

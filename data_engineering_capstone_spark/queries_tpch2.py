@@ -80,39 +80,30 @@ def q4_priority_late_ship(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate the semi join doesn't — the distinct-key law needs a
     many:1 key ratio to win. All three forms verified row-identical at
     the replica.
-    """
-    from .sources.pqmeta import fact_width
 
-    return q4_plan(
-        _t(spark, sf_dir, "orders"),
-        _t(spark, sf_dir, "lineitem"),
-        width=fact_width(spark, sf_dir, "lineitem"),
-    )
-
-
-def q4_plan(orders: DataFrame, lineitem: DataFrame, width: int) -> DataFrame:
-    """The shipped q4 plan over supplied inputs.
-
-    ``width`` pins the semi join's exchange width plan-side (round-11
-    width law). Only the LINEITEM side repartitions: Catalyst's
+    The semi join's exchange width is pinned plan-side (round-11 width
+    law). Only the LINEITEM side repartitions: Catalyst's
     PushdownLeftSemiAntiJoin would re-park an orders-side repartition
     above the join, and EnsureRequirements aligns the orders exchange
     to the lineitem side's explicit width anyway (measured — one
     REPARTITION_BY_NUM side propagates its width to the partner's
-    ENSURE exchange)."""
-    o = orders.filter(
+    ENSURE exchange).
+    """
+    from .sources.pqmeta import fact_width
+
+    o = _t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-07-01").cast("timestamp"))
     )
     l = (
-        lineitem
+        _t(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_shipdate")
         # derived bound: min possible o_orderdate in the window + 60 days
         .filter(
             F.col("l_shipdate")
             > F.lit("1996-01-01").cast("timestamp") + F.expr("INTERVAL 60 DAYS")
         )
-        .repartition(width, "l_orderkey")
+        .repartition(fact_width(spark, sf_dir, "lineitem"), "l_orderkey")
     )
     cond = (F.col("l_orderkey") == F.col("o_orderkey")) & (
         F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
@@ -323,7 +314,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides take the footer width (a bare un-hinted join there would
     # ride session width — the q9 OOM class). The lineitem join takes a
     # one-sided width either way (EnsureRequirements aligns the
-    # partner; measured, see q4_plan).
+    # partner; measured, see q4_priority_late_ship).
     width = fact_width(spark, sf_dir, "lineitem")
     if footer_fits_broadcast(sf_dir, "customer"):
         c_side, o_side = F.broadcast(c), o

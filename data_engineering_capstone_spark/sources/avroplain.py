@@ -35,10 +35,6 @@ import zlib
 
 MAGIC = b"Obj\x01"
 
-SPARK_TO_AVRO = {"bigint": "long", "int": "long", "double": "double",
-                 "string": "string", "boolean": "boolean"}
-
-
 # ---------------------------------------------------------------- encoding
 
 def zigzag_encode(n: int) -> bytes:
@@ -274,6 +270,32 @@ def _data_files(path: str) -> list[str]:
     return [path]
 
 
+# Spark type name -> Avro type, for the writers
+_SPARK_TO_AVRO = {"long": "long", "integer": "long", "double": "double",
+                  "string": "string", "boolean": "boolean"}
+
+
+def _avro_fields(schema) -> list[tuple[str, str]]:
+    """(name, Avro type) per column of a Spark ``schema``; raises on a
+    column type the codec does not write."""
+    fields = []
+    for f in schema.fields:
+        t = f.dataType.typeName()
+        if t not in _SPARK_TO_AVRO:
+            raise ValueError(f"avroplain: unsupported column type {t} ({f.name})")
+        fields.append((f.name, _SPARK_TO_AVRO[t]))
+    return fields
+
+
+def _avro_rows(fields: list[tuple[str, str]], iterator) -> list[tuple]:
+    """Spark rows as codec values (ints widened to Python ``int``)."""
+    return [
+        tuple(None if v is None else (int(v) if t == "long" else v)
+              for (_, t), v in zip(fields, row))
+        for row in iterator
+    ]
+
+
 class AvroBlockRange(InputPartition):
     def __init__(self, ranges: list[tuple[str, int]]):
         self.ranges = ranges  # [(file, block_offset)]
@@ -338,21 +360,11 @@ class AvroPlainWriter(DataSourceWriter):
     drops a ``_SUCCESS`` marker only after every task committed (same
     contract readers of the versioned-table operator rely on)."""
 
-    _SPARK_TO_AVRO = {"long": "long", "integer": "long", "double": "double",
-                      "string": "string", "boolean": "boolean"}
-
     def __init__(self, options, schema, overwrite: bool):
         self.path = options["path"]
         self.codec = options.get("codec", "deflate")
         self.block_rows = int(options.get("blockRows", 1000))
-        self.fields = []
-        for f in schema.fields:
-            t = f.dataType.typeName()
-            if t not in self._SPARK_TO_AVRO:
-                raise ValueError(
-                    f"avroplain writer: unsupported column type {t} ({f.name})"
-                )
-            self.fields.append((f.name, self._SPARK_TO_AVRO[t]))
+        self.fields = _avro_fields(schema)
         _os.makedirs(self.path, exist_ok=True)
         if overwrite:
             for old in _glob.glob(_os.path.join(self.path, "part-*.avro")):
@@ -364,11 +376,7 @@ class AvroPlainWriter(DataSourceWriter):
     def write(self, iterator) -> AvroCommit:
         import uuid
 
-        rows = [
-            tuple(None if v is None else (int(v) if t == "long" else v)
-                  for (_, t), v in zip(self.fields, row))
-            for row in iterator
-        ]
+        rows = _avro_rows(self.fields, iterator)
         fp = _os.path.join(self.path, f"part-{uuid.uuid4().hex}.avro")
         write_avro(fp, self.fields, rows, codec=self.codec,
                    block_rows=self.block_rows)
@@ -396,19 +404,10 @@ class AvroPlainStreamWriter(DataSourceStreamWriter):
     batch write, stream write.
     """
 
-    _SPARK_TO_AVRO = AvroPlainWriter._SPARK_TO_AVRO
-
     def __init__(self, options, schema):
         self.path = options["path"]
         self.codec = options.get("codec", "deflate")
-        self.fields = []
-        for f in schema.fields:
-            t = f.dataType.typeName()
-            if t not in self._SPARK_TO_AVRO:
-                raise ValueError(
-                    f"avroplain stream writer: unsupported column type {t} ({f.name})"
-                )
-            self.fields.append((f.name, self._SPARK_TO_AVRO[t]))
+        self.fields = _avro_fields(schema)
         _os.makedirs(self.path, exist_ok=True)
 
     def write(self, iterator) -> AvroCommit:
@@ -416,11 +415,7 @@ class AvroPlainStreamWriter(DataSourceStreamWriter):
 
         staging = _os.path.join(self.path, "_staging")
         _os.makedirs(staging, exist_ok=True)
-        rows = [
-            tuple(None if v is None else (int(v) if t == "long" else v)
-                  for (_, t), v in zip(self.fields, row))
-            for row in iterator
-        ]
+        rows = _avro_rows(self.fields, iterator)
         fp = _os.path.join(staging, f"part-{uuid.uuid4().hex}.avro")
         write_avro(fp, self.fields, rows, codec=self.codec)
         return AvroCommit(fp)

@@ -212,41 +212,6 @@ def dedup_within_watermark(events: DataFrame, keys: list[str], watermark: str = 
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
 
 
-def streaming_count_min(
-    events: DataFrame, key_col: str = "user_id", width: int = 1 << 12, depth: int = 4
-) -> DataFrame:
-    """Count-min sketch maintained AS streaming state: the counter table
-    is a (row, pos) → count aggregation, and counters are purely
-    additive, so Spark's incremental streaming agg IS the sketch-merge —
-    every micro-batch folds its partial counters in, and the drained
-    table is row-identical to the batch ``count_min_table`` over the
-    same input (mergeability made executable; differential-tested in
-    tests/test_streaming.py). Complete mode, no watermark: counters
-    never retract, and state is bounded by ``depth * width`` regardless
-    of stream length or key cardinality — the property that makes
-    sketches the only frequency state that survives an unbounded stream.
-    Same hash family as ``operators.sketches.count_min_table``
-    (seeded xxhash64 mod width), so a sketch drained from the stream is
-    probe-compatible with ``count_min_estimate``.
-    """
-    rows = events.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("row"),
-                        F.pmod(
-                            F.xxhash64(F.col(key_col), F.lit(d)), F.lit(width)
-                        ).alias("pos"),
-                    )
-                    for d in range(depth)
-                ]
-            )
-        ).alias("rp")
-    )
-    return rows.groupBy("rp.row", "rp.pos").agg(F.count(F.lit(1)).alias("n"))
-
-
 def run_foreach_batch_to_parquet(stream_df: DataFrame, out_dir: str) -> None:
     """foreachBatch sink: per-microbatch custom write (the escape hatch
     for sinks Structured Streaming lacks natively — JDBC upserts, multi-

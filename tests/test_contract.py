@@ -146,17 +146,20 @@ def test_survey_cites_exactly_the_registered_entries():
 
 
 def test_package_imports_are_used():
-    """Every name a package module imports is used in that module. An
-    import kept for its side effect or as a re-export says so with
-    ``noqa`` on its line (``catalog.load_all``, the ``__init__`` files)."""
+    """Every name a module of the package, ``tests/`` or ``tools/``
+    imports is used in that module. An import kept for its side effect
+    or as a re-export says so with ``noqa`` on its line
+    (``catalog.load_all``, the ``__init__`` files)."""
     import ast
+    import itertools
     import os
 
     import data_engineering_capstone_spark as pkg
 
-    pkg_dir = os.path.dirname(pkg.__file__)
+    repo = os.path.dirname(os.path.dirname(pkg.__file__))
+    tops = [os.path.dirname(pkg.__file__)] + [os.path.join(repo, d) for d in ("tests", "tools")]
     unused = []
-    for root, _dirs, files in os.walk(pkg_dir):
+    for root, _dirs, files in itertools.chain.from_iterable(map(os.walk, tops)):
         for name in sorted(files):
             if not name.endswith(".py"):
                 continue
@@ -176,6 +179,6 @@ def test_package_imports_are_used():
                 for alias in node.names:
                     bound = alias.asname or alias.name.split(".")[0]
                     if bound not in used:
-                        rel = os.path.relpath(path, pkg_dir).replace(os.sep, "/")
+                        rel = os.path.relpath(path, repo).replace(os.sep, "/")
                         unused.append(f"{rel}:{node.lineno} {bound}")
     assert unused == [], f"unused imports: {unused}"

@@ -478,3 +478,31 @@ def test_final_sort_law_fact_grain_entries_unsorted(spark, sf_dir):
         assert not root.lstrip("*+- (0123456789)").startswith("Sort"), (
             f"{name} roots in a Sort:\n{root}"
         )
+
+
+def test_dump_normalisation_makes_rebuilt_plans_equal(spark, sf_dir):
+    """``tools/explain_audit.py --dump-dir`` writes each plan through
+    ``normalise_plan``, so ``diff -r`` of two dumps is the plan-identity
+    check of a refactor. Two builds of the same entry in one session
+    differ in expression ids; normalised, they are equal. The schema
+    evolution entry reads back under its given union schema, so its scan
+    columns keep that schema's order from run to run."""
+    import re
+
+    from data_engineering_capstone_spark.catalog import load_all
+    from tools.explain_audit import normalise_plan, plan_text
+
+    cat = load_all()
+    for name in ("q5_revenue_by_nation", "scan_parquet_schema_evolution"):
+        first, second = (plan_text(cat[name].fn(spark, sf_dir)) for _ in range(2))
+        assert first != second, f"{name}: rebuilt plan kept its expression ids"
+        assert normalise_plan(first) == normalise_plan(second), name
+    # the aggregate prunes the scan to n_regionkey and batch, which keep
+    # the union schema's order
+    union = ["n_nationkey", "n_name", "n_regionkey", "batch"]
+    schemas = re.findall(r"ReadSchema: struct<([^>]*)>", first)
+    assert schemas, "no parquet scan in the schema evolution plan"
+    for schema in schemas:
+        cols = [c.split(":")[0] for c in schema.split(",")]
+        assert cols == [c for c in union if c in cols], schema
+        assert {"n_regionkey", "batch"} <= set(cols), schema

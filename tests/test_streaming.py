@@ -485,11 +485,9 @@ def test_streaming_count_min_equals_batch_sketch(spark, sf_dir):
         count_min_estimate,
         count_min_table,
     )
-    from data_engineering_capstone_spark.streaming.windows import streaming_count_min
-
     events = load_table(spark, sf_dir, "events")
     streamed = run_available_now(
-        streaming_count_min(stream_events(spark, sf_dir)), "complete"
+        count_min_table(stream_events(spark, sf_dir), "user_id"), "complete"
     )
     batch = count_min_table(events, "user_id")
     a = {tuple(r) for r in streamed.collect()}
@@ -574,7 +572,6 @@ def test_streaming_count_min_survives_checkpoint_restart(spark, tmp_path):
     import os
 
     from data_engineering_capstone_spark.operators.sketches import count_min_table
-    from data_engineering_capstone_spark.streaming.windows import streaming_count_min
 
     src = str(tmp_path / "src")
     sink = str(tmp_path / "sink")
@@ -588,7 +585,7 @@ def test_streaming_count_min_survives_checkpoint_restart(spark, tmp_path):
             .parquet(src)
         )
         q = (
-            streaming_count_min(stream)
+            count_min_table(stream, "user_id")
             .writeStream.foreachBatch(
                 lambda b, _bid: b.write.mode("overwrite").parquet(sink)
             )

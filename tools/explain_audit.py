@@ -10,6 +10,10 @@ antipatterns that would hurt at 100 TB:
 * row-at-a-time Python UDF markers (BatchEvalPython) — pandas/Arrow only
 
 Usage: python tools/explain_audit.py [sf_dir] [query ...] [--dump-dir D]
+
+``--dump-dir D`` writes each audited entry's plan to ``D/<name>.txt``,
+normalised (``normalise_plan``), so ``diff -r`` of two dumps made at two
+revisions shows exactly the entries whose plans changed.
 """
 
 from __future__ import annotations
@@ -99,7 +103,6 @@ SKIP = {
     "scan_semicolon_csv_roundtrip",
     "scan_json_roundtrip",
     "scan_orc_roundtrip",
-    "stream_foreach_batch_sink",
     # these also write on plan construction (sinks, Derby, XPT, versions)
     "scan_xml_roundtrip",
     "scan_jdbc_roundtrip",
@@ -123,6 +126,19 @@ def plan_text(df) -> str:
         df.explain("formatted")
         df.explain()  # simple mode carries the *(N) codegen-span markers
     return buf.getvalue()
+
+
+def normalise_plan(plan: str) -> str:
+    """``plan`` with the ids that differ between two builds of the same
+    query replaced by fixed tokens: expression ids (``#123``, ``#123L``),
+    ``plan_id=``, RDD ids, and the process id where it names a scratch
+    path (``.../dec_spark/<pid>/...``) or a view. Two ``--dump-dir``
+    dumps of unchanged plans are then identical, so ``diff -r`` is the
+    identity check. The audit itself reads the raw plan."""
+    plan = re.sub(r"#\d+", "#N", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
+    plan = re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
+    return re.sub(rf"(?<=[/_]){os.getpid()}(?!\d)", "<pid>", plan)
 
 
 def udaf_grain_flags(plan: str) -> list[str]:
@@ -442,7 +458,7 @@ def main() -> int:
         if dump_dir:
             os.makedirs(dump_dir, exist_ok=True)
             with open(os.path.join(dump_dir, f"{name}.txt"), "w") as f:
-                f.write(plan)
+                f.write(normalise_plan(plan))
         flags = audit_one(name, plan)
         pushed = len(re.findall(r"PushedFilters: \[[^\]]", plan))
         codegen = len(set(re.findall(r"\*\((\d+)\)", plan)))
