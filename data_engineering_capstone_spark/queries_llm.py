@@ -1182,7 +1182,7 @@ def llm_fuzzy_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirrors exactly. Plan shape: ONE shuffle (groupBy block key ->
     postings list), cap as an array-size filter, in-row double-explode
     pair generation, codegen Levenshtein verify — the same postings-list
-    fusion as ngram_jaccard_pairs (llm/dedup.py:214).
+    fusion as ngram_jaccard_pairs (llm/dedup.py:_shingle_overlaps).
     """
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source",
